@@ -35,11 +35,11 @@ from .catalog import register_views
 # log; here the statement lands on an ACID table instead of nowhere).
 _ON_EQS = r"\w+\.\w+\s*=\s*\w+\.\w+(?:\s+AND\s+\w+\.\w+\s*=\s*\w+\.\w+)*"
 _MERGE_RE = re.compile(
-    r"^\s*MERGE\s+INTO\s+(?P<target>\w+)(?:\s+AS\s+(?P<talias>\w+))?"
+    r"MERGE\s+INTO\s+(?P<target>\w+)(?:\s+AS\s+(?P<talias>\w+))?"
     r"\s+USING\s+(?P<source>\w+)(?:\s+AS\s+(?P<salias>\w+))?"
     r"\s+ON\s+(?P<on>" + _ON_EQS + r")"
     r"\s+WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*"
-    r"\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*\s*;?\s*$",
+    r"\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*",
     re.IGNORECASE)
 _ON_EQ_RE = re.compile(
     r"^(?P<q1>\w+)\.(?P<k1>\w+)\s*=\s*(?P<q2>\w+)\.(?P<k2>\w+)$")
@@ -52,11 +52,11 @@ _ON_EQ_RE = re.compile(
 # limitation: clause conditions may not contain CASE…WHEN…THEN (the
 # clause splitter keys on WHEN/THEN keywords).
 _MERGE_HEAD_RE = re.compile(
-    r"^\s*MERGE\s+(?P<evolve>WITH\s+SCHEMA\s+EVOLUTION\s+)?"
+    r"MERGE\s+(?P<evolve>WITH\s+SCHEMA\s+EVOLUTION\s+)?"
     r"INTO\s+(?P<target>\w+)(?:\s+AS\s+(?P<talias>\w+))?"
     r"\s+USING\s+(?P<source>\w+)(?:\s+AS\s+(?P<salias>\w+))?"
     r"\s+ON\s+(?P<on>" + _ON_EQS + r")"
-    r"\s+(?P<clauses>WHEN\s+.+?)\s*;?\s*$",
+    r"\s+(?P<clauses>WHEN\s+.+?)",
     re.IGNORECASE | re.DOTALL)
 _MERGE_CLAUSE_START_RE = re.compile(
     r"\bWHEN\s+(?:NOT\s+)?MATCHED\b", re.IGNORECASE)
@@ -76,63 +76,63 @@ _MERGE_ACT_INSERT_RE = re.compile(
     re.IGNORECASE | re.DOTALL)
 
 # UPDATE t SET c1 = expr[, c2 = expr ...] WHERE cond — copy-on-write
-# update on a registered txlog table.  v1 surface: top-level commas
-# separate assignments (no commas inside an assignment expression).
+# update on a registered txlog table.  Assignments split on top-level
+# commas (commas inside parentheses or string literals stay put).
 _UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+(?P<target>\w+)\s+SET\s+(?P<sets>.+?)"
-    r"(?:\s+WHERE\s+(?P<cond>.+?))?\s*;?\s*$",
+    r"UPDATE\s+(?P<target>\w+)\s+SET\s+(?P<sets>.+?)"
+    r"(?:\s+WHERE\s+(?P<cond>.+?))?",
     re.IGNORECASE | re.DOTALL)
 
 # DELETE FROM t [WHERE cond] — copy-on-write delete on a txlog table
 # (no WHERE = delete all rows, Delta semantics).
 _DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(?P<target>\w+)"
-    r"(?:\s+WHERE\s+(?P<cond>.+?))?\s*;?\s*$",
+    r"DELETE\s+FROM\s+(?P<target>\w+)"
+    r"(?:\s+WHERE\s+(?P<cond>.+?))?",
     re.IGNORECASE | re.DOTALL)
 
 # INSERT INTO t SELECT ... / INSERT INTO t VALUES (...) — append commit
 # on a registered txlog table (catalog/parquet tables keep the plain
 # spark.sql fallback).
 _INSERT_RE = re.compile(
-    r"^\s*INSERT\s+INTO\s+(?P<target>\w+)\s*"
+    r"INSERT\s+INTO\s+(?P<target>\w+)\s*"
     r"(?:\(\s*(?!SELECT\b|VALUES\b|WITH\b|TABLE\b)"
     r"(?P<cols>\w+(?:\s*,\s*\w+)*)\s*\)\s*)?"
-    r"(?P<query>(?:SELECT|VALUES|WITH|TABLE)\b.+)$",
+    r"(?P<query>(?:SELECT|VALUES|WITH|TABLE)\b.+)",
     re.IGNORECASE | re.DOTALL)
 
 # INSERT OVERWRITE t [PARTITION (p = v)] SELECT ... — atomic replace of
 # the table (or one partition, Delta's replaceWhere shape).
 _INSERT_OVERWRITE_RE = re.compile(
-    r"^\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?(?P<target>\w+)"
+    r"INSERT\s+OVERWRITE\s+(?:TABLE\s+)?(?P<target>\w+)"
     r"(?:\s+PARTITION\s*\(\s*(?P<pcol>\w+)\s*=\s*"
     r"'?(?P<pval>[\w.-]+)'?\s*\))?"
-    r"\s+(?P<query>(?:SELECT|VALUES|WITH|TABLE)\b.+)$",
+    r"\s+(?P<query>(?:SELECT|VALUES|WITH|TABLE)\b.+)",
     re.IGNORECASE | re.DOTALL)
 
 # CREATE TABLE t (col TYPE, ...) USING TXLOG [LOCATION '...'] — empty
 # ACID table DDL (the COPY INTO landing-table shape).
 _CREATE_EMPTY_RE = re.compile(
-    r"^\s*CREATE\s+TABLE\s+(?P<name>\w+)\s*"
+    r"CREATE\s+TABLE\s+(?P<name>\w+)\s*"
     r"\((?P<cols>.+)\)\s*USING\s+TXLOG"
-    r"(?:\s+LOCATION\s+'(?P<loc>[^']+)')?\s*;?\s*$",
+    r"(?:\s+LOCATION\s+'(?P<loc>[^']+)')?",
     re.IGNORECASE | re.DOTALL)
 
 # RESTORE TABLE t TO VERSION AS OF n / TO TIMESTAMP AS OF ms|'iso' —
 # rollback-as-new-commit (timestamp resolves via version_at_timestamp).
 _RESTORE_RE = re.compile(
-    r"^\s*RESTORE\s+TABLE\s+(?P<target>\w+)\s+TO\s+"
+    r"RESTORE\s+TABLE\s+(?P<target>\w+)\s+TO\s+"
     r"(?:VERSION\s+AS\s+OF\s+(?P<version>\d+)"
-    r"|TIMESTAMP\s+AS\s+OF\s+(?P<ts>\d+|'[^']*'))\s*;?\s*$",
+    r"|TIMESTAMP\s+AS\s+OF\s+(?P<ts>\d+|'[^']*'))",
     re.IGNORECASE)
 
 # DESCRIBE DETAIL t — table metadata as a result set (Delta's shape).
 _DETAIL_RE = re.compile(
-    r"^\s*DESCRIBE\s+DETAIL\s+(?P<target>\w+)\s*;?\s*$", re.IGNORECASE)
+    r"DESCRIBE\s+DETAIL\s+(?P<target>\w+)", re.IGNORECASE)
 
 # FSCK REPAIR TABLE t [DRY RUN] — drop log references to missing files.
 _FSCK_RE = re.compile(
-    r"^\s*FSCK\s+REPAIR\s+TABLE\s+(?P<target>\w+)"
-    r"(?P<dry>\s+DRY\s+RUN)?\s*;?\s*$", re.IGNORECASE)
+    r"FSCK\s+REPAIR\s+TABLE\s+(?P<target>\w+)"
+    r"(?P<dry>\s+DRY\s+RUN)?", re.IGNORECASE)
 
 # table_changes('t', start[, end]) — Delta's CDF table-valued function,
 # rewritten to a temp view of read_changes on the plain-SQL fallback.
@@ -145,31 +145,30 @@ _TABLE_CHANGES_RE = re.compile(
 # VACUUM t [RETAIN n HOURS] [DRY RUN] — physical cleanup of
 # unreferenced files; DRY RUN lists candidates and touches nothing.
 _VACUUM_RE = re.compile(
-    r"^\s*VACUUM\s+(?P<target>\w+)"
+    r"VACUUM\s+(?P<target>\w+)"
     r"(?:\s+(?P<lite>LITE))?"
     r"(?:\s+RETAIN\s+(?P<hours>\d+(?:\.\d+)?)\s+HOURS)?"
-    r"(?:\s+(?P<dry>DRY\s+RUN))?\s*;?\s*$",
+    r"(?:\s+(?P<dry>DRY\s+RUN))?",
     re.IGNORECASE)
 
 # ALTER TABLE t ADD CONSTRAINT name CHECK (expr) / DROP CONSTRAINT name
 # — write-time-enforced CHECK constraints on a txlog table.
 _ADD_CONSTRAINT_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+ADD\s+CONSTRAINT\s+"
-    r"(?P<name>\w+)\s+CHECK\s*\((?P<expr>.+)\)\s*;?\s*$",
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+ADD\s+CONSTRAINT\s+"
+    r"(?P<name>\w+)\s+CHECK\s*\((?P<expr>.+)\)",
     re.IGNORECASE | re.DOTALL)
 _DROP_CONSTRAINT_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+DROP\s+CONSTRAINT\s+"
-    r"(?P<name>\w+)\s*;?\s*$",
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+DROP\s+CONSTRAINT\s+"
+    r"(?P<name>\w+)",
     re.IGNORECASE)
 
 # ALTER TABLE t ADD CONSTRAINT name EXPECT (pred)
 # [ON VIOLATION DROP ROW | ON VIOLATION FAIL UPDATE] — DLT expectations:
 # data-quality gates on every ingest, pass/fail metrics per commit.
 _ADD_EXPECTATION_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+ADD\s+CONSTRAINT\s+"
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+ADD\s+CONSTRAINT\s+"
     r"(?P<name>\w+)\s+EXPECT\s*\((?P<expr>.+)\)\s*"
-    r"(?:ON\s+VIOLATION\s+(?P<viol>DROP\s+ROW|FAIL\s+UPDATE))?"
-    r"\s*;?\s*$",
+    r"(?:ON\s+VIOLATION\s+(?P<viol>DROP\s+ROW|FAIL\s+UPDATE))?",
     re.IGNORECASE | re.DOTALL)
 
 # SHOW EXPECTATIONS t — the table's declared data-quality gates (name,
@@ -178,29 +177,29 @@ _ADD_EXPECTATION_RE = re.compile(
 # event log (DLT's data-quality dashboard shape: one row per
 # (commit, expectation), aggregable with plain SQL).
 _SHOW_EXPECTATIONS_RE = re.compile(
-    r"^\s*SHOW\s+EXPECTATIONS\s+(?P<target>\w+)\s*;?\s*$",
+    r"SHOW\s+EXPECTATIONS\s+(?P<target>\w+)",
     re.IGNORECASE)
 _SHOW_EXP_METRICS_RE = re.compile(
-    r"^\s*SHOW\s+EXPECTATION\s+METRICS\s+(?P<target>\w+)\s*;?\s*$",
+    r"SHOW\s+EXPECTATION\s+METRICS\s+(?P<target>\w+)",
     re.IGNORECASE)
 
 # ALTER TABLE t SET TBLPROPERTIES ('k'='v', ...) / UNSET TBLPROPERTIES
 # ('k', ...) and SHOW TBLPROPERTIES t — Delta table properties.
 _SET_PROPS_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+SET\s+TBLPROPERTIES\s*"
-    r"\((?P<kvs>.+)\)\s*;?\s*$",
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+SET\s+TBLPROPERTIES\s*"
+    r"\((?P<kvs>.+)\)",
     re.IGNORECASE | re.DOTALL)
 _UNSET_PROPS_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+UNSET\s+TBLPROPERTIES\s*"
-    r"(?:IF\s+EXISTS\s*)?\((?P<keys>.+)\)\s*;?\s*$",
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+UNSET\s+TBLPROPERTIES\s*"
+    r"(?:IF\s+EXISTS\s*)?\((?P<keys>.+)\)",
     re.IGNORECASE | re.DOTALL)
 _SHOW_PROPS_RE = re.compile(
-    r"^\s*SHOW\s+TBLPROPERTIES\s+(?P<target>\w+)\s*;?\s*$",
+    r"SHOW\s+TBLPROPERTIES\s+(?P<target>\w+)",
     re.IGNORECASE)
 # SHOW PARTITIONS t — the partitions present in the CURRENT snapshot,
 # resolved from commit metadata (partitionValues) without opening a file.
 _SHOW_PARTS_RE = re.compile(
-    r"^\s*SHOW\s+PARTITIONS\s+(?P<target>\w+)\s*;?\s*$",
+    r"SHOW\s+PARTITIONS\s+(?P<target>\w+)",
     re.IGNORECASE)
 _PROP_KV_RE = re.compile(r"'(?P<k>[^']+)'\s*=\s*'(?P<v>[^']*)'")
 _PROP_KEY_RE = re.compile(r"'(?P<k>[^']+)'")
@@ -208,48 +207,48 @@ _PROP_KEY_RE = re.compile(r"'(?P<k>[^']+)'")
 # ALTER TABLE t RENAME COLUMN a TO b / DROP COLUMN a — metadata-only
 # schema changes via column mapping (no file rewritten).
 _RENAME_COLUMN_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+RENAME\s+COLUMN\s+"
-    r"(?P<old>\w+)\s+TO\s+(?P<new>\w+)\s*;?\s*$",
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+RENAME\s+COLUMN\s+"
+    r"(?P<old>\w+)\s+TO\s+(?P<new>\w+)",
     re.IGNORECASE)
 
 # ALTER TABLE t ADD COLUMN c TYPE — metadata-only schema addition
 # (nullable; existing rows read typed NULL until a write materializes).
 _ADD_COLUMN_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+ADD\s+COLUMNS?\s*\(?\s*"
-    r"(?P<name>\w+)\s+(?P<dtype>[\w()<>,\s]+?)\s*\)?\s*;?\s*$",
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+ADD\s+COLUMNS?\s*\(?\s*"
+    r"(?P<name>\w+)\s+(?P<dtype>[\w()<>,\s]+?)\s*\)?",
     re.IGNORECASE)
 _DROP_COLUMN_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+DROP\s+COLUMN\s+"
-    r"(?P<name>\w+)\s*;?\s*$",
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+DROP\s+COLUMN\s+"
+    r"(?P<name>\w+)",
     re.IGNORECASE)
 
 # ALTER TABLE t ALTER COLUMN c TYPE <wider> — metadata-only type widening
 # (Delta's type-widening table feature; old segments read wide in place).
 _ALTER_TYPE_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+ALTER\s+COLUMN\s+"
-    r"(?P<name>\w+)\s+TYPE\s+(?P<dtype>[\w()<>,\s]+?)\s*;?\s*$",
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+ALTER\s+COLUMN\s+"
+    r"(?P<name>\w+)\s+TYPE\s+(?P<dtype>[\w()<>,\s]+?)",
     re.IGNORECASE)
 
 # ALTER TABLE t ALTER COLUMN c SET DEFAULT <expr> / DROP DEFAULT —
 # defaults apply to writes that omit the column (never to existing rows).
 _SET_DEFAULT_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+ALTER\s+COLUMN\s+"
-    r"(?P<name>\w+)\s+SET\s+DEFAULT\s+(?P<expr>.+?)\s*;?\s*$",
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+ALTER\s+COLUMN\s+"
+    r"(?P<name>\w+)\s+SET\s+DEFAULT\s+(?P<expr>.+?)",
     re.IGNORECASE | re.DOTALL)
 _DROP_DEFAULT_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+ALTER\s+COLUMN\s+"
-    r"(?P<name>\w+)\s+DROP\s+DEFAULT\s*;?\s*$",
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+ALTER\s+COLUMN\s+"
+    r"(?P<name>\w+)\s+DROP\s+DEFAULT",
     re.IGNORECASE)
 
 # CREATE MATERIALIZED VIEW mv AS SELECT <groups + COUNT(*)/SUM(expr) AS
 # alias...> FROM <txlog table> GROUP BY <groups> — an INCREMENTALLY
 # maintained aggregate stored as its own ACID txlog table.
 _CREATE_MV_RE = re.compile(
-    r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(?P<name>\w+)\s+AS\s+"
+    r"CREATE\s+MATERIALIZED\s+VIEW\s+(?P<name>\w+)\s+AS\s+"
     r"SELECT\s+(?P<select>.+?)\s+FROM\s+(?P<src>\w+)"
     r"(?P<joins>(?:\s+JOIN\s+\w+\s+ON\s+\w+\.\w+\s*=\s*\w+\.\w+)*)"
     r"(?:\s+WHERE\s+(?P<where>.+?))?\s+"
-    r"GROUP\s+BY\s+(?P<group>\w+(?:\s*,\s*\w+)*)\s*;?\s*$",
+    r"GROUP\s+BY\s+(?P<group>\w+(?:\s*,\s*\w+)*)",
     re.IGNORECASE | re.DOTALL)
 
 # one JOIN clause inside _CREATE_MV_RE's joins blob
@@ -260,49 +259,49 @@ _MV_JOIN_RE = re.compile(
 # REFRESH MATERIALIZED VIEW mv — fold the source's CDF since the last
 # refreshed version into the stored aggregate (cost ∝ change volume).
 _REFRESH_MV_RE = re.compile(
-    r"^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+(?P<name>\w+)"
-    r"(?:\s+(?P<full>FULL))?\s*;?\s*$",
+    r"REFRESH\s+MATERIALIZED\s+VIEW\s+(?P<name>\w+)"
+    r"(?:\s+(?P<full>FULL))?",
     re.IGNORECASE)
 
 # DROP MATERIALIZED VIEW mv — deregister and delete the MV's storage
 # (plain tables refuse: DROP of a base table is out of scope).
 _DROP_MV_RE = re.compile(
-    r"^\s*DROP\s+MATERIALIZED\s+VIEW\s+(?P<name>\w+)\s*;?\s*$",
+    r"DROP\s+MATERIALIZED\s+VIEW\s+(?P<name>\w+)",
     re.IGNORECASE)
 
 # SHOW MATERIALIZED VIEWS — every registered MV with its source, fold
 # position, and staleness (source commits not yet folded).
 _SHOW_MV_RE = re.compile(
-    r"^\s*SHOW\s+MATERIALIZED\s+VIEWS\s*;?\s*$", re.IGNORECASE)
+    r"SHOW\s+MATERIALIZED\s+VIEWS", re.IGNORECASE)
 
 # GENERATE symlink_format_manifest FOR TABLE t — external-reader interop
 # (Presto/Trino/Athena/DuckDB read the listed files without the log).
 # GENERATE iceberg_metadata FOR TABLE t — UniForm-shape Iceberg metadata
 # export (metadata.json + manifests over the same parquet, zero copies).
 _GENERATE_RE = re.compile(
-    r"^\s*GENERATE\s+(?P<kind>symlink_format_manifest|iceberg_metadata)"
-    r"\s+FOR\s+TABLE\s+(?P<target>\w+)\s*;?\s*$", re.IGNORECASE)
+    r"GENERATE\s+(?P<kind>symlink_format_manifest|iceberg_metadata)"
+    r"\s+FOR\s+TABLE\s+(?P<target>\w+)", re.IGNORECASE)
 
 # EXPIRE SNAPSHOTS FOR TABLE t KEEP LAST n — Iceberg-side maintenance
 # over the UniForm export (sources/uniform.py): bound the exported
 # snapshot list like cleanup_metadata bounds the Delta log.
 _EXPIRE_SNAPSHOTS_RE = re.compile(
-    r"^\s*EXPIRE\s+SNAPSHOTS\s+FOR\s+TABLE\s+(?P<target>\w+)\s+"
-    r"KEEP\s+LAST\s+(?P<n>\d+)\s*;?\s*$", re.IGNORECASE)
+    r"EXPIRE\s+SNAPSHOTS\s+FOR\s+TABLE\s+(?P<target>\w+)\s+"
+    r"KEEP\s+LAST\s+(?P<n>\d+)", re.IGNORECASE)
 
 # SHOW ICEBERG SNAPSHOTS FOR TABLE t — the operator's view of the
 # UniForm export (Iceberg's snapshots metadata table): one row per
 # exported snapshot with its summary counters, metadata-only.
 _SHOW_ICEBERG_SNAPSHOTS_RE = re.compile(
-    r"^\s*SHOW\s+ICEBERG\s+SNAPSHOTS\s+FOR\s+TABLE\s+(?P<target>\w+)"
-    r"\s*;?\s*$", re.IGNORECASE)
+    r"SHOW\s+ICEBERG\s+SNAPSHOTS\s+FOR\s+TABLE\s+(?P<target>\w+)",
+    re.IGNORECASE)
 
 # SHOW ICEBERG FILES|MANIFESTS FOR TABLE t [AT SNAPSHOT n] — the other
 # two Iceberg metadata tables over the UniForm export: per-file scan
 # plan (files) and manifest-list health (manifests), both metadata-only.
 _SHOW_ICEBERG_PLAN_RE = re.compile(
-    r"^\s*SHOW\s+ICEBERG\s+(?P<what>FILES|MANIFESTS)\s+FOR\s+TABLE\s+"
-    r"(?P<target>\w+)(?:\s+AT\s+SNAPSHOT\s+(?P<sid>\d+))?\s*;?\s*$",
+    r"SHOW\s+ICEBERG\s+(?P<what>FILES|MANIFESTS)\s+FOR\s+TABLE\s+"
+    r"(?P<target>\w+)(?:\s+AT\s+SNAPSHOT\s+(?P<sid>\d+))?",
     re.IGNORECASE)
 
 # CREATE/DROP ICEBERG TAG name FOR TABLE t [AT SNAPSHOT n] and
@@ -310,19 +309,19 @@ _SHOW_ICEBERG_PLAN_RE = re.compile(
 # export: tags pin snapshots (dataset versioning for reproducible
 # reads; expire_snapshots never removes a tagged snapshot).
 _ICEBERG_TAG_RE = re.compile(
-    r"^\s*(?P<verb>CREATE|DROP)\s+ICEBERG\s+TAG\s+(?P<name>\w+)\s+"
-    r"FOR\s+TABLE\s+(?P<target>\w+)(?:\s+AT\s+SNAPSHOT\s+(?P<sid>\d+))?"
-    r"\s*;?\s*$", re.IGNORECASE)
+    r"(?P<verb>CREATE|DROP)\s+ICEBERG\s+TAG\s+(?P<name>\w+)\s+"
+    r"FOR\s+TABLE\s+(?P<target>\w+)(?:\s+AT\s+SNAPSHOT\s+(?P<sid>\d+))?",
+    re.IGNORECASE)
 _SHOW_ICEBERG_REFS_RE = re.compile(
-    r"^\s*SHOW\s+ICEBERG\s+REFS\s+FOR\s+TABLE\s+(?P<target>\w+)"
-    r"\s*;?\s*$", re.IGNORECASE)
+    r"SHOW\s+ICEBERG\s+REFS\s+FOR\s+TABLE\s+(?P<target>\w+)",
+    re.IGNORECASE)
 
 # APPLY CHANGES INTO t FROM src KEYS (k, ...) [APPLY AS DELETE WHEN pred]
 # SEQUENCE BY seq [COLUMNS * EXCEPT (op, ...)] [STORED AS SCD TYPE 1|2]
 # [TRACK HISTORY ON * EXCEPT (c, ...)] — the DLT CDC statement over the
 # engine's apply_changes / apply_changes_scd2 folds.
 _APPLY_CHANGES_RE = re.compile(
-    r"^\s*APPLY\s+CHANGES\s+INTO\s+(?P<target>\w+)\s+"
+    r"APPLY\s+CHANGES\s+INTO\s+(?P<target>\w+)\s+"
     r"FROM\s+(?P<src>\w+)\s+"
     r"KEYS\s*\((?P<keys>[^)]+)\)\s*"
     r"(?:(?P<ignulls>IGNORE\s+NULL\s+UPDATES)\s+)?"
@@ -331,8 +330,7 @@ _APPLY_CHANGES_RE = re.compile(
     r"(?:\s+COLUMNS\s+\*\s+EXCEPT\s*\((?P<dropcols>[^)]+)\))?"
     r"(?:\s+STORED\s+AS\s+SCD\s+TYPE\s+(?P<scd>[12]))?"
     r"(?:\s+TRACK\s+HISTORY\s+ON\s+\*\s+EXCEPT\s*"
-    r"\((?P<thex>[^)]+)\))?"
-    r"\s*;?\s*$",
+    r"\((?P<thex>[^)]+)\))?",
     re.IGNORECASE | re.DOTALL)
 
 # APPLY CHANGES INTO t FROM SNAPSHOT src VERSION n KEYS (k, ...)
@@ -341,58 +339,56 @@ _APPLY_CHANGES_RE = re.compile(
 # change feed); the engine diffs it against the target's current state
 # to derive insert/update/delete events and folds them at sequence n.
 _APPLY_SNAPSHOT_RE = re.compile(
-    r"^\s*APPLY\s+CHANGES\s+INTO\s+(?P<target>\w+)\s+"
+    r"APPLY\s+CHANGES\s+INTO\s+(?P<target>\w+)\s+"
     r"FROM\s+SNAPSHOT\s+(?P<src>\w+)\s+"
     r"VERSION\s+(?P<ver>\d+)\s+"
     r"KEYS\s*\((?P<keys>[^)]+)\)"
     r"(?:\s+STORED\s+AS\s+SCD\s+TYPE\s+(?P<scd>[12]))?"
     r"(?:\s+TRACK\s+HISTORY\s+ON\s+\*\s+EXCEPT\s*"
-    r"\((?P<thex>[^)]+)\))?"
-    r"\s*;?\s*$",
+    r"\((?P<thex>[^)]+)\))?",
     re.IGNORECASE | re.DOTALL)
 
 # ALTER TABLE t DROP FEATURE name — protocol downgrade once the feature's
 # on-disk state is provably absent (live DVs refuse; REORG PURGE first).
 _DROP_FEATURE_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+DROP\s+FEATURE\s+"
-    r"(?P<name>\w+)\s*;?\s*$", re.IGNORECASE)
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+DROP\s+FEATURE\s+"
+    r"(?P<name>\w+)", re.IGNORECASE)
 
 # ALTER TABLE t ALTER COLUMN c SET NOT NULL / DROP NOT NULL — column
 # invariant: SET validates existing data (one scan, refused on NULLs),
 # then every write enforces it; DROP is metadata-only.
 _NOT_NULL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+ALTER\s+COLUMN\s+"
-    r"(?P<name>\w+)\s+(?P<action>SET|DROP)\s+NOT\s+NULL\s*;?\s*$",
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+ALTER\s+COLUMN\s+"
+    r"(?P<name>\w+)\s+(?P<action>SET|DROP)\s+NOT\s+NULL",
     re.IGNORECASE)
 
 # ALTER TABLE t CLUSTER BY (a, b) / CLUSTER BY NONE — liquid-clustering
 # metadata; plain OPTIMIZE re-clusters on the recorded columns.
 _CLUSTER_BY_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<target>\w+)\s+CLUSTER\s+BY\s+"
-    r"(?:NONE|\(\s*(?P<cols>\w+(?:\s*,\s*\w+)*)\s*\))\s*;?\s*$",
+    r"ALTER\s+TABLE\s+(?P<target>\w+)\s+CLUSTER\s+BY\s+"
+    r"(?:NONE|\(\s*(?P<cols>\w+(?:\s*,\s*\w+)*)\s*\))",
     re.IGNORECASE)
 
 # OPTIMIZE t [WHERE pcol = v] [ZORDER BY (a, b)] — compaction (optionally
 # scoped to one partition, Delta's incremental-OPTIMIZE shape) /
 # multi-dimensional layout.
 _OPTIMIZE_RE = re.compile(
-    r"^\s*OPTIMIZE\s+(?P<target>\w+)"
+    r"OPTIMIZE\s+(?P<target>\w+)"
     r"(?:\s+WHERE\s+(?P<wcol>\w+)\s*=\s*'?(?P<wval>[\w.-]+)'?)?"
-    r"(?:\s+ZORDER\s+BY\s*\((?P<cols>[\w\s,]+)\))?\s*;?\s*$",
+    r"(?:\s+ZORDER\s+BY\s*\((?P<cols>[\w\s,]+)\))?",
     re.IGNORECASE)
 
 # COPY INTO t FROM '<dir>' FILEFORMAT = PARQUET|CSV|JSON — idempotent
 # bulk file ingest (each source file loaded at most once ever).
 _COPY_INTO_RE = re.compile(
-    r"^\s*COPY\s+INTO\s+(?P<target>\w+)\s+FROM\s+'(?P<src>[^']+)'"
-    r"\s+FILEFORMAT\s*=\s*(?P<fmt>\w+)\s*;?\s*$",
+    r"COPY\s+INTO\s+(?P<target>\w+)\s+FROM\s+'(?P<src>[^']+)'"
+    r"\s+FILEFORMAT\s*=\s*(?P<fmt>\w+)",
     re.IGNORECASE)
 
 # REORG TABLE t APPLY (PURGE) — rewrite only the DV'd segments,
 # materializing deletion-vector tombstones (Delta's REORG ... PURGE).
 _REORG_RE = re.compile(
-    r"^\s*REORG\s+TABLE\s+(?P<target>\w+)\s+APPLY\s*\(\s*PURGE\s*\)"
-    r"\s*;?\s*$",
+    r"REORG\s+TABLE\s+(?P<target>\w+)\s+APPLY\s*\(\s*PURGE\s*\)",
     re.IGNORECASE)
 
 # t VERSION AS OF n / t TIMESTAMP AS OF ms — time travel inside DQL
@@ -408,12 +404,12 @@ _SQL_STRING_RE = re.compile(r"'(?:[^']|'')*'")
 
 # BEGIN; stmt; …; COMMIT — multi-statement transaction script: the txlog
 # effects of every statement land as ONE commit per table.
-_BEGIN_RE = re.compile(r"^\s*BEGIN\s*(?:;|$)", re.IGNORECASE)
+_BEGIN_RE = re.compile(r"BEGIN(?:\s*;.*)?", re.IGNORECASE | re.DOTALL)
 
 # DESCRIBE HISTORY t — the commit log as a result set (Delta's DESCRIBE
 # HISTORY shape: version, op, timestamp + op metrics as JSON).
 _HISTORY_RE = re.compile(
-    r"^\s*DESCRIBE\s+HISTORY\s+(?P<target>\w+)\s*;?\s*$", re.IGNORECASE)
+    r"DESCRIBE\s+HISTORY\s+(?P<target>\w+)", re.IGNORECASE)
 
 # CREATE [OR REPLACE] TABLE dest (SHALLOW|DEEP) CLONE src [VERSION AS OF n]
 # — clone of a registered txlog table; dest registers under the new name,
@@ -423,19 +419,19 @@ _HISTORY_RE = re.compile(
 # is the Databricks re-clone idiom: it runs the INCREMENTAL refresh
 # (only segments new since the recorded sourceVersion are copied).
 _CLONE_RE = re.compile(
-    r"^\s*CREATE\s+(?:(?P<replace>OR\s+REPLACE)\s+)?TABLE\s+(?P<dest>\w+)\s+"
+    r"CREATE\s+(?:(?P<replace>OR\s+REPLACE)\s+)?TABLE\s+(?P<dest>\w+)\s+"
     r"(?P<mode>SHALLOW|DEEP)\s+CLONE\s+"
-    r"(?P<src>\w+)(?:\s+VERSION\s+AS\s+OF\s+(?P<version>\d+))?\s*;?\s*$",
+    r"(?P<src>\w+)(?:\s+VERSION\s+AS\s+OF\s+(?P<version>\d+))?",
     re.IGNORECASE)
 
 # CREATE TABLE t USING TXLOG [LOCATION '...'] AS SELECT ... — CTAS into a
 # NEW ACID txlog table (Delta's CREATE TABLE ... USING DELTA AS SELECT),
 # registered under the name so later DQL/DML statements target it.
 _CTAS_TXLOG_RE = re.compile(
-    r"^\s*CREATE\s+(?:(?P<replace>OR\s+REPLACE)\s+)?TABLE\s+(?P<name>\w+)"
+    r"CREATE\s+(?:(?P<replace>OR\s+REPLACE)\s+)?TABLE\s+(?P<name>\w+)"
     r"\s+USING\s+TXLOG"
     r"(?:\s+LOCATION\s+'(?P<loc>[^']+)')?"
-    r"\s+AS\s+(?P<select>SELECT\b.+)$",
+    r"\s+AS\s+(?P<select>SELECT\b.+)",
     re.IGNORECASE | re.DOTALL)
 
 
@@ -462,6 +458,10 @@ class Engine:
         snapshot as a temp view, and MERGE INTO statements route to its
         ACID merge_upsert."""
         self.txlog_tables[name] = table
+        self._refresh_view(name, table)
+
+    def _refresh_view(self, name: str, table) -> None:
+        """Point the temp view ``name`` at ``table``'s current snapshot."""
         self._public_view(table.read()).createOrReplaceTempView(name)
 
     def sql(self, command: str) -> DataFrame:
@@ -469,470 +469,316 @@ class Engine:
         registered txlog tables), or a ``BEGIN; …; COMMIT`` script —
         several statements whose txlog effects land atomically as ONE
         commit per table (the reference's log carries arbitrary
-        statement sequences; this is their ACID batching)."""
-        if _BEGIN_RE.match(command):
-            return self._txn_script(command)
-        m = _CTAS_TXLOG_RE.match(command)
-        if m:
-            return self._ctas_txlog(m)
-        m = _MERGE_RE.match(command)
-        if m:
-            return self._merge_into(command, m)
-        m = _MERGE_HEAD_RE.match(command)
-        if m:
-            return self._merge_into_full(command, m)
-        m = _UPDATE_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            return self._update(m)
-        m = _DELETE_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            return self._delete(m)
-        m = _INSERT_OVERWRITE_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            t = self.txlog_tables[target]
-            query = m.group("query").rstrip().rstrip(";")
-            df = self.spark.sql(self._rewrite_time_travel(query))
-            table_cols = t.read().columns
-            ident = t._identity_columns()
-            expect = [c for c in table_cols if c not in ident]
-            if len(df.columns) != len(expect):
-                raise ValueError(
-                    f"INSERT OVERWRITE {target}: query produces "
-                    f"{len(df.columns)} column(s), table expects "
-                    f"{len(expect)}")
-            df = df.toDF(*expect)
-            parts = ({m.group("pcol"): m.group("pval")}
-                     if m.group("pcol") else None)
-            version = t.insert_overwrite(df, partitions=parts)
-            return self._dml_ack(target, version)
-        m = _CREATE_EMPTY_RE.match(command)
-        if m:
-            from .sources.txlog import TxLogTable
-            from .tmpstage import staging_dir
+        statement sequences; this is their ACID batching).
 
-            name = m.group("name")
-            if name in self.txlog_tables:
-                raise ValueError(
-                    f"txlog table {name!r} already registered")
-            loc = m.group("loc") or staging_dir(
-                f"engine_create_{name}", self.sf_dir)
-            empty = self.spark.createDataFrame([], m.group("cols"))
-            t = TxLogTable.create(self.spark, loc, empty,
-                                  overwrite=m.group("loc") is None)
-            self.register_txlog(name, t)
-            return self.spark.createDataFrame(
-                [(name, loc, t.latest_version())],
-                "table_name string, location string, version long")
-        m = _INSERT_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            return self._insert_into(m)
-        m = _RESTORE_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            t = self.txlog_tables[target]
-            if m.group("version") is not None:
-                v = int(m.group("version"))
-            else:
-                v = t.version_at_timestamp(
-                    self._parse_ts_operand(m.group("ts")))
-            return self._dml_ack(target, t.restore(v))
-        m = _DETAIL_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            d = self.txlog_tables[m.group("target")].detail()
-            return self.spark.createDataFrame(
-                [(m.group("target"), d["location"], d["version"],
-                  d["numFiles"], d["sizeInBytes"],
-                  ",".join(d["partitionColumns"]),
-                  d["columnMappingMode"],
-                  json.dumps(d["protocol"], sort_keys=True))],
-                "table_name string, location string, version long, "
-                "num_files long, size_in_bytes long, "
-                "partition_columns string, column_mapping_mode string, "
-                "protocol string")
-        m = _FSCK_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            dry = m.group("dry") is not None
-            missing = self.txlog_tables[target].repair(dry_run=dry)
-            if not dry:
-                self._public_view(self.txlog_tables[target].read()) \
-                    .createOrReplaceTempView(target)
-            return self.spark.createDataFrame(
-                [(target, len(missing), dry)],
-                "table_name string, missing_files long, dry_run boolean")
-        m = _VACUUM_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            hours = m.group("hours")
-            retention = (float(hours) * 3600.0 if hours is not None
-                         else 24 * 3600.0)
-            dry = m.group("dry") is not None
-            removed = self.txlog_tables[target].vacuum(
-                retention, dry_run=dry, lite=m.group("lite") is not None)
-            return self.spark.createDataFrame(
-                [(target, len(removed), dry)],
-                "table_name string, files_removed long, dry_run boolean")
-        m = _ADD_EXPECTATION_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            viol = (m.group("viol") or "").upper().split()
-            action = {"DROP": "drop", "FAIL": "fail"}.get(
-                viol[0] if viol else "", "warn")
-            version = self.txlog_tables[target].add_expectation(
-                m.group("name"), m.group("expr").strip(), action)
-            return self._dml_ack(target, version)
-        m = _ADD_CONSTRAINT_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            version = self.txlog_tables[target].add_constraint(
-                m.group("name"), m.group("expr").strip())
-            return self._dml_ack(target, version)
-        m = _DROP_CONSTRAINT_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            # DROP CONSTRAINT covers both CHECK constraints and
-            # expectations (one namespace, enforced at ADD)
-            target = m.group("target")
-            t = self.txlog_tables[target]
-            version = (t.drop_expectation(m.group("name"))
-                       if m.group("name") in t.expectations()
-                       else t.drop_constraint(m.group("name")))
-            return self._dml_ack(target, version)
-        m = _RENAME_COLUMN_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            version = self.txlog_tables[target].rename_column(
-                m.group("old"), m.group("new"))
-            return self._dml_ack(target, version)
-        m = _DROP_COLUMN_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            version = self.txlog_tables[target].drop_column(
-                m.group("name"))
-            return self._dml_ack(target, version)
-        m = _ADD_COLUMN_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            version = self.txlog_tables[target].add_column(
-                m.group("name"), m.group("dtype"))
-            return self._dml_ack(target, version)
-        m = _ALTER_TYPE_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            version = self.txlog_tables[target].alter_column_type(
-                m.group("name"), m.group("dtype"))
-            return self._dml_ack(target, version)
-        m = _SET_DEFAULT_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            version = self.txlog_tables[target].set_column_default(
-                m.group("name"), m.group("expr"))
-            return self._dml_ack(target, version)
-        m = _DROP_DEFAULT_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            version = self.txlog_tables[target].unset_column_default(
-                m.group("name"))
-            return self._dml_ack(target, version)
-        m = _CREATE_MV_RE.match(command)
-        if m and m.group("src") in self.txlog_tables:
-            return self._create_mv(m)
-        m = _REFRESH_MV_RE.match(command)
-        if m and m.group("name") in self.txlog_tables:
-            return self.refresh_materialized_view(
-                m.group("name"), full=m.group("full") is not None)
-        if _SHOW_MV_RE.match(command):
-            rows = []
-            for name, t in sorted(self.txlog_tables.items()):
-                props = t.properties()
-                if "mv.source" not in props:
-                    continue
-                src = self.txlog_tables.get(props["mv.source"])
-                last = t.txn_version_for(f"mv::{name}")
-                cur = src.latest_version() if src is not None else -1
-                rows.append((name, props["mv.source"], props["mv.groupBy"],
-                             int(last), int(cur),
-                             max(0, cur - last) if src is not None else -1))
-            return self.spark.createDataFrame(
-                rows, "view_name string, source string, group_by string, "
-                      "folded_source_version long, source_version long, "
-                      "stale_commits long")
-        m = _DROP_MV_RE.match(command)
-        if m and m.group("name") in self.txlog_tables:
-            import shutil
-            name = m.group("name")
-            mv = self.txlog_tables[name]
-            if "mv.source" not in mv.properties():
-                raise ValueError(
-                    f"{name!r} is not a materialized view; DROP of a "
-                    "base table is out of scope")
-            self.spark.catalog.dropTempView(name)
-            del self.txlog_tables[name]
-            shutil.rmtree(mv.path, ignore_errors=True)
-            return self.spark.createDataFrame(
-                [(name, True)], "table_name string, dropped boolean")
-        m = _APPLY_SNAPSHOT_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            t = self.txlog_tables[target]
-            version = t.apply_changes_from_snapshot(
-                self.spark.table(m.group("src")),
-                key=[k.strip() for k in m.group("keys").split(",")],
-                snapshot_version=int(m.group("ver")),
-                scd_type=int(m.group("scd") or 1),
-                track_history_except_columns=(
-                    [c.strip() for c in m.group("thex").split(",")]
-                    if m.group("thex") else None))
-            return self._dml_ack(target, version)
-        m = _APPLY_CHANGES_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            return self._apply_changes_stmt(m)
-        m = _GENERATE_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            t = self.txlog_tables[target]
-            if m.group("kind").lower() == "iceberg_metadata":
-                path = t.generate_iceberg_metadata()
-            else:
-                path = t.generate_manifest()
-            return self.spark.createDataFrame(
-                [(target, path)], "table_name string, manifest string")
-        m = _EXPIRE_SNAPSHOTS_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            from .sources import uniform
-            target = m.group("target")
-            victims = uniform.expire_snapshots(
-                self.txlog_tables[target].path,
-                keep_last=int(m.group("n")))
-            return self.spark.createDataFrame(
-                [(target, len(victims))],
-                "table_name string, expired_metadata_files int")
-        m = _SHOW_ICEBERG_SNAPSHOTS_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            from .sources import uniform
-            return uniform.snapshots_df(
-                self.spark, self.txlog_tables[m.group("target")].path)
-        m = _SHOW_ICEBERG_PLAN_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            from .sources import uniform
-            fn = (uniform.files_df if m.group("what").upper() == "FILES"
-                  else uniform.manifests_df)
-            return fn(self.spark, self.txlog_tables[m.group("target")].path,
-                      snapshot_id=(int(m.group("sid"))
-                                   if m.group("sid") else None))
-        m = _ICEBERG_TAG_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            from .sources import uniform
-            path = self.txlog_tables[m.group("target")].path
-            if m.group("verb").upper() == "CREATE":
-                ref = uniform.create_tag(
-                    path, m.group("name"),
-                    snapshot_id=(int(m.group("sid"))
-                                 if m.group("sid") else None))
-                sid = ref["snapshot-id"]
-            else:
-                sid = uniform.resolve_ref(path, m.group("name"))
-                uniform.drop_tag(path, m.group("name"))
-            return self.spark.createDataFrame(
-                [(m.group("name"), int(sid))],
-                "name string, snapshot_id bigint")
-        m = _SHOW_ICEBERG_REFS_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            from .sources import uniform
-            return uniform.refs_df(
-                self.spark, self.txlog_tables[m.group("target")].path)
-        m = _DROP_FEATURE_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            version = self.txlog_tables[target].drop_feature(
-                m.group("name"))
-            return self._dml_ack(target, version)
-        m = _NOT_NULL_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            t = self.txlog_tables[target]
-            if m.group("action").upper() == "SET":
-                version = t.set_not_null(m.group("name"))
-            else:
-                version = t.drop_not_null(m.group("name"))
-            return self._dml_ack(target, version)
-        m = _CLUSTER_BY_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            cols = m.group("cols")
-            version = self.txlog_tables[target].set_cluster_by(
-                [c.strip() for c in cols.split(",")] if cols else None)
-            return self._dml_ack(target, version)
-        m = _SET_PROPS_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            props = {kv.group("k"): kv.group("v")
-                     for kv in _PROP_KV_RE.finditer(m.group("kvs"))}
-            if not props:
-                raise ValueError(
-                    "SET TBLPROPERTIES needs 'key' = 'value' pairs")
-            t = self.txlog_tables[target]
-            # Delta's enablement property: backfills baseRowIds for the
-            # existing files (its own metadata commit), then any other
-            # keys land as an ordinary property merge.
-            if props.pop("delta.enableRowTracking", "").lower() == "true":
-                version = t.enable_row_tracking()
-                if not props:
-                    return self._dml_ack(target, version)
-            # Delta's feature-enablement properties:
-            # 'delta.feature.<name>' = 'supported' → protocol commit
-            feat_keys = [k for k in props if k.startswith("delta.feature.")]
-            version = None
-            for k in feat_keys:
-                if props.pop(k).lower() != "supported":
-                    raise ValueError(
-                        f"{k}: the only valid value is 'supported'")
-                version = t.add_feature(k[len("delta.feature."):])
-            if not props and version is not None:
-                return self._dml_ack(target, version)
-            version = t.set_properties(props)
-            return self._dml_ack(target, version)
-        m = _UNSET_PROPS_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            keys = [kv.group("k")
-                    for kv in _PROP_KEY_RE.finditer(m.group("keys"))]
-            version = self.txlog_tables[target].unset_properties(keys)
-            return self._dml_ack(target, version)
-        m = _SHOW_PROPS_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            props = self.txlog_tables[m.group("target")].properties()
-            return self.spark.createDataFrame(
-                sorted(props.items()) or [], "key string, value string")
-        m = _SHOW_EXPECTATIONS_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            exps = self.txlog_tables[m.group("target")].expectations()
-            return self.spark.createDataFrame(
-                [(n, s["expr"], s["action"])
-                 for n, s in sorted(exps.items())] or [],
-                "name string, expr string, action string")
-        m = _SHOW_EXP_METRICS_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            # the per-commit pass/fail metrics recorded by the ingest
-            # gates, exploded one row per (commit, expectation) — a
-            # queryable event log: cumulative dashboards are a GROUP BY
-            # name away, trend lines a GROUP BY version.  Metadata-
-            # scale (reads commit info only, never data files).
-            hist = self.txlog_tables[m.group("target")].history()
-            rows = [(h["version"], h["op"], h["ts"], name,
-                     mm["action"], mm["passed"], mm["failed"])
-                    for h in hist
-                    for name, mm in sorted(
-                        h.get("expectations", {}).items())]
-            return self.spark.createDataFrame(
-                rows or [],
-                "version long, operation string, timestamp_ms long, "
-                "name string, action string, passed long, failed long")
-        m = _SHOW_PARTS_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            t = self.txlog_tables[m.group("target")]
-            pcols = t._partition_columns()
-            if not pcols:
-                raise ValueError(
-                    f"SHOW PARTITIONS {m.group('target')}: table is not "
-                    "partitioned")
-            active, _ = t._snapshot()
-            # drop None-bearing tuples (files missing stats/partition
-            # values) BEFORE sorted() — None doesn't compare to str
-            seen = sorted({
-                row for row in (
-                    tuple((stats or {}).get("partitionValues", {}).get(c)
-                          for c in pcols)
-                    for stats in active.values())
-                if all(v is not None for v in row)})
-            return self.spark.createDataFrame(
-                seen, ", ".join(f"{c} string" for c in pcols))
-        m = _OPTIMIZE_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            cols = m.group("cols")
-            zorder = ([c.strip() for c in cols.split(",")] if cols
-                      else None)
-            where = ({m.group("wcol"): m.group("wval")}
-                     if m.group("wcol") else None)
-            version = self.txlog_tables[target].optimize_compact(
-                zorder_by=zorder, where=where)
-            return self._dml_ack(target, version)
-        m = _REORG_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            version = self.txlog_tables[target].reorg_purge()
-            return self._dml_ack(target, version)
-        m = _COPY_INTO_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            target = m.group("target")
-            version, n = self.txlog_tables[target].copy_into(
-                m.group("src"), m.group("fmt").lower())
-            self._public_view(self.txlog_tables[target].read()) \
-                .createOrReplaceTempView(target)
-            return self.spark.createDataFrame(
-                [(target, version, n)],
-                "table_name string, version long, files_loaded long")
-        m = _HISTORY_RE.match(command)
-        if m and m.group("target") in self.txlog_tables:
-            hist = self.txlog_tables[m.group("target")].history()
-            rows = [(h["version"], h["op"], h["ts"],
-                     json.dumps({k: v for k, v in h.items()
-                                 if k not in ("version", "op", "ts")},
-                                sort_keys=True))
-                    for h in hist]
-            return self.spark.createDataFrame(
-                rows,
-                "version long, operation string, timestamp_ms long, "
-                "operation_metrics string")
-        m = _CLONE_RE.match(command)
-        if m and m.group("src") in self.txlog_tables:
-            src_name, dest_name = m.group("src"), m.group("dest")
-            mode = m.group("mode").lower()
-            src = self.txlog_tables[src_name]
-            dest_path = os.path.join(os.path.dirname(
-                os.path.abspath(src.path)), dest_name)
-            v = m.group("version")
-            if (m.group("replace") and mode == "deep"
-                    and dest_name in self.txlog_tables):
-                # re-clone idiom → incremental refresh of the existing
-                # deep clone (refuses if it isn't one / has diverged)
-                clone = self.txlog_tables[dest_name]
-                if v is not None:
-                    raise ValueError(
-                        "CREATE OR REPLACE ... DEEP CLONE refresh cannot "
-                        "pin VERSION AS OF; drop the clause to sync to "
-                        "the source head")
-                clone.clone_refresh()
-                # re-register: SELECTs resolve through a temp-view
-                # snapshot taken at registration time
-                self.register_txlog(dest_name, clone)
-            else:
-                if m.group("replace"):
-                    # OR REPLACE is ONLY the deep re-clone (incremental
-                    # refresh) idiom over an existing registered deep
-                    # clone; promising replace semantics and then failing
-                    # clone_to's concurrent-create guard would mislead
-                    raise ValueError(
-                        "CREATE OR REPLACE ... CLONE only refreshes an "
-                        "EXISTING registered DEEP clone (the re-clone "
-                        "idiom); "
-                        + ("SHALLOW clones track the source live and "
-                           "need no refresh — use CREATE TABLE ... "
-                           "SHALLOW CLONE for a first clone"
-                           if mode == "shallow" else
-                           f"{dest_name!r} is not a registered table — "
-                           "use CREATE TABLE ... DEEP CLONE for the "
-                           "first clone"))
-                clone = src.clone_to(
-                    dest_path, version=int(v) if v is not None else None,
-                    mode=mode)
-                self.register_txlog(dest_name, clone)
-            return self.spark.createDataFrame(
-                [(dest_name, dest_path, clone.latest_version())],
-                "table_name string, location string, version long")
+        The statement, stripped of surrounding whitespace and one
+        trailing ``;``, goes to the first ``_ROUTES`` row that takes it;
+        anything else runs as plain Spark SQL after the time-travel and
+        table_changes rewrites."""
+        stmt = command.strip().removesuffix(";").rstrip()
+        for pattern, guard, handler in _ROUTES:
+            m = pattern.fullmatch(stmt)
+            if m and (guard is None or m[guard] in self.txlog_tables):
+                return handler(self, m)
         return self.spark.sql(
             self._rewrite_table_changes(self._rewrite_time_travel(command)))
+
+    def _insert_overwrite(self, m: re.Match) -> DataFrame:
+        target = m["target"]
+        t = self.txlog_tables[target]
+        df = self.spark.sql(self._rewrite_time_travel(m["query"]))
+        table_cols = t.read().columns
+        ident = t._identity_columns()
+        expect = [c for c in table_cols if c not in ident]
+        if len(df.columns) != len(expect):
+            raise ValueError(
+                f"INSERT OVERWRITE {target}: query produces "
+                f"{len(df.columns)} column(s), table expects "
+                f"{len(expect)}")
+        parts = {m["pcol"]: m["pval"]} if m["pcol"] else None
+        version = t.insert_overwrite(df.toDF(*expect), partitions=parts)
+        return self._dml_ack(target, version)
+
+    def _create_empty(self, m: re.Match) -> DataFrame:
+        from .sources.txlog import TxLogTable
+        from .tmpstage import staging_dir
+
+        name = m["name"]
+        if name in self.txlog_tables:
+            raise ValueError(f"txlog table {name!r} already registered")
+        loc = m["loc"] or staging_dir(f"engine_create_{name}", self.sf_dir)
+        empty = self.spark.createDataFrame([], m["cols"])
+        t = TxLogTable.create(self.spark, loc, empty,
+                              overwrite=m["loc"] is None)
+        self.register_txlog(name, t)
+        return self._table_ack(name, loc, t)
+
+    def _table_ack(self, name: str, loc: str, table) -> DataFrame:
+        """The (table_name, location, version) ack of a created table."""
+        return self.spark.createDataFrame(
+            [(name, loc, table.latest_version())],
+            "table_name string, location string, version long")
+
+    def _detail(self, m: re.Match) -> DataFrame:
+        d = self.txlog_tables[m["target"]].detail()
+        return self.spark.createDataFrame(
+            [(m["target"], d["location"], d["version"], d["numFiles"],
+              d["sizeInBytes"], ",".join(d["partitionColumns"]),
+              d["columnMappingMode"],
+              json.dumps(d["protocol"], sort_keys=True))],
+            "table_name string, location string, version long, "
+            "num_files long, size_in_bytes long, "
+            "partition_columns string, column_mapping_mode string, "
+            "protocol string")
+
+    def _fsck(self, m: re.Match) -> DataFrame:
+        target = m["target"]
+        t = self.txlog_tables[target]
+        dry = m["dry"] is not None
+        missing = t.repair(dry_run=dry)
+        if not dry:
+            self._refresh_view(target, t)
+        return self.spark.createDataFrame(
+            [(target, len(missing), dry)],
+            "table_name string, missing_files long, dry_run boolean")
+
+    def _vacuum(self, m: re.Match) -> DataFrame:
+        target = m["target"]
+        hours = float(m["hours"]) if m["hours"] is not None else 24.0
+        dry = m["dry"] is not None
+        removed = self.txlog_tables[target].vacuum(
+            hours * 3600.0, dry_run=dry, lite=m["lite"] is not None)
+        return self.spark.createDataFrame(
+            [(target, len(removed), dry)],
+            "table_name string, files_removed long, dry_run boolean")
+
+    def _refresh_mv(self, m: re.Match) -> DataFrame:
+        return self.refresh_materialized_view(
+            m["name"], full=m["full"] is not None)
+
+    def _show_mvs(self, m: re.Match) -> DataFrame:
+        rows = []
+        for name, t in sorted(self.txlog_tables.items()):
+            props = t.properties()
+            if "mv.source" not in props:
+                continue
+            src = self.txlog_tables.get(props["mv.source"])
+            last = t.txn_version_for(f"mv::{name}")
+            cur = src.latest_version() if src is not None else -1
+            rows.append((name, props["mv.source"], props["mv.groupBy"],
+                         int(last), int(cur),
+                         max(0, cur - last) if src is not None else -1))
+        return self.spark.createDataFrame(
+            rows, "view_name string, source string, group_by string, "
+                  "folded_source_version long, source_version long, "
+                  "stale_commits long")
+
+    def _drop_mv(self, m: re.Match) -> DataFrame:
+        import shutil
+
+        name = m["name"]
+        mv = self.txlog_tables[name]
+        if "mv.source" not in mv.properties():
+            raise ValueError(
+                f"{name!r} is not a materialized view; DROP of a "
+                "base table is out of scope")
+        self.spark.catalog.dropTempView(name)
+        del self.txlog_tables[name]
+        shutil.rmtree(mv.path, ignore_errors=True)
+        return self.spark.createDataFrame(
+            [(name, True)], "table_name string, dropped boolean")
+
+    def _apply_snapshot(self, m: re.Match) -> DataFrame:
+        version = self.txlog_tables[m["target"]].apply_changes_from_snapshot(
+            self.spark.table(m["src"]), key=_names(m["keys"]),
+            snapshot_version=int(m["ver"]), scd_type=int(m["scd"] or 1),
+            track_history_except_columns=_names(m["thex"]))
+        return self._dml_ack(m["target"], version)
+
+    def _generate(self, m: re.Match) -> DataFrame:
+        t = self.txlog_tables[m["target"]]
+        path = (t.generate_iceberg_metadata()
+                if m["kind"].lower() == "iceberg_metadata"
+                else t.generate_manifest())
+        return self.spark.createDataFrame(
+            [(m["target"], path)], "table_name string, manifest string")
+
+    def _expire_snapshots(self, m: re.Match) -> DataFrame:
+        from .sources import uniform
+
+        victims = uniform.expire_snapshots(
+            self.txlog_tables[m["target"]].path, keep_last=int(m["n"]))
+        return self.spark.createDataFrame(
+            [(m["target"], len(victims))],
+            "table_name string, expired_metadata_files int")
+
+    def _show_iceberg_snapshots(self, m: re.Match) -> DataFrame:
+        from .sources import uniform
+
+        return uniform.snapshots_df(
+            self.spark, self.txlog_tables[m["target"]].path)
+
+    def _show_iceberg_plan(self, m: re.Match) -> DataFrame:
+        from .sources import uniform
+
+        fn = (uniform.files_df if m["what"].upper() == "FILES"
+              else uniform.manifests_df)
+        return fn(self.spark, self.txlog_tables[m["target"]].path,
+                  snapshot_id=int(m["sid"]) if m["sid"] else None)
+
+    def _iceberg_tag(self, m: re.Match) -> DataFrame:
+        from .sources import uniform
+
+        path = self.txlog_tables[m["target"]].path
+        if m["verb"].upper() == "CREATE":
+            sid = uniform.create_tag(
+                path, m["name"],
+                snapshot_id=int(m["sid"]) if m["sid"] else None,
+            )["snapshot-id"]
+        else:
+            sid = uniform.resolve_ref(path, m["name"])
+            uniform.drop_tag(path, m["name"])
+        return self.spark.createDataFrame(
+            [(m["name"], int(sid))], "name string, snapshot_id bigint")
+
+    def _show_iceberg_refs(self, m: re.Match) -> DataFrame:
+        from .sources import uniform
+
+        return uniform.refs_df(
+            self.spark, self.txlog_tables[m["target"]].path)
+
+    def _set_props(self, m: re.Match) -> DataFrame:
+        target = m["target"]
+        props = {kv["k"]: kv["v"] for kv in _PROP_KV_RE.finditer(m["kvs"])}
+        if not props:
+            raise ValueError("SET TBLPROPERTIES needs 'key' = 'value' pairs")
+        t = self.txlog_tables[target]
+        # Delta's enablement property: backfills baseRowIds for the
+        # existing files (its own metadata commit), then any other
+        # keys land as an ordinary property merge.
+        if props.pop("delta.enableRowTracking", "").lower() == "true":
+            version = t.enable_row_tracking()
+            if not props:
+                return self._dml_ack(target, version)
+        # Delta's feature-enablement properties:
+        # 'delta.feature.<name>' = 'supported' → protocol commit
+        feat_keys = [k for k in props if k.startswith("delta.feature.")]
+        version = None
+        for k in feat_keys:
+            if props.pop(k).lower() != "supported":
+                raise ValueError(
+                    f"{k}: the only valid value is 'supported'")
+            version = t.add_feature(k[len("delta.feature."):])
+        if props or version is None:
+            version = t.set_properties(props)
+        return self._dml_ack(target, version)
+
+    def _show_props(self, m: re.Match) -> DataFrame:
+        props = self.txlog_tables[m["target"]].properties()
+        return self.spark.createDataFrame(
+            sorted(props.items()) or [], "key string, value string")
+
+    def _show_expectations(self, m: re.Match) -> DataFrame:
+        exps = self.txlog_tables[m["target"]].expectations()
+        rows = [(n, s["expr"], s["action"]) for n, s in sorted(exps.items())]
+        return self.spark.createDataFrame(
+            rows or [], "name string, expr string, action string")
+
+    def _show_exp_metrics(self, m: re.Match) -> DataFrame:
+        # the per-commit pass/fail metrics recorded by the ingest gates,
+        # exploded one row per (commit, expectation) — a queryable event
+        # log: cumulative dashboards are a GROUP BY name away, trend
+        # lines a GROUP BY version.  Metadata-scale (reads commit info
+        # only, never data files).
+        hist = self.txlog_tables[m["target"]].history()
+        rows = [(h["version"], h["op"], h["ts"], name,
+                 mm["action"], mm["passed"], mm["failed"])
+                for h in hist
+                for name, mm in sorted(h.get("expectations", {}).items())]
+        return self.spark.createDataFrame(
+            rows or [],
+            "version long, operation string, timestamp_ms long, "
+            "name string, action string, passed long, failed long")
+
+    def _show_partitions(self, m: re.Match) -> DataFrame:
+        t = self.txlog_tables[m["target"]]
+        pcols = t._partition_columns()
+        if not pcols:
+            raise ValueError(
+                f"SHOW PARTITIONS {m['target']}: table is not partitioned")
+        active, _ = t._snapshot()
+        # drop None-bearing tuples (files missing stats/partition
+        # values) BEFORE sorted() — None doesn't compare to str
+        seen = sorted({
+            row for row in (
+                tuple((stats or {}).get("partitionValues", {}).get(c)
+                      for c in pcols)
+                for stats in active.values())
+            if all(v is not None for v in row)})
+        return self.spark.createDataFrame(
+            seen, ", ".join(f"{c} string" for c in pcols))
+
+    def _copy_into(self, m: re.Match) -> DataFrame:
+        target = m["target"]
+        t = self.txlog_tables[target]
+        version, n = t.copy_into(m["src"], m["fmt"].lower())
+        self._refresh_view(target, t)
+        return self.spark.createDataFrame(
+            [(target, version, n)],
+            "table_name string, version long, files_loaded long")
+
+    def _history(self, m: re.Match) -> DataFrame:
+        hist = self.txlog_tables[m["target"]].history()
+        rows = [(h["version"], h["op"], h["ts"],
+                 json.dumps({k: v for k, v in h.items()
+                             if k not in ("version", "op", "ts")},
+                            sort_keys=True))
+                for h in hist]
+        return self.spark.createDataFrame(
+            rows,
+            "version long, operation string, timestamp_ms long, "
+            "operation_metrics string")
+
+    def _clone(self, m: re.Match) -> DataFrame:
+        dest_name, mode, v = m["dest"], m["mode"].lower(), m["version"]
+        src = self.txlog_tables[m["src"]]
+        dest_path = os.path.join(os.path.dirname(
+            os.path.abspath(src.path)), dest_name)
+        if (m["replace"] and mode == "deep"
+                and dest_name in self.txlog_tables):
+            # re-clone idiom → incremental refresh of the existing
+            # deep clone (refuses if it isn't one / has diverged)
+            clone = self.txlog_tables[dest_name]
+            if v is not None:
+                raise ValueError(
+                    "CREATE OR REPLACE ... DEEP CLONE refresh cannot "
+                    "pin VERSION AS OF; drop the clause to sync to "
+                    "the source head")
+            clone.clone_refresh()
+        else:
+            if m["replace"]:
+                # OR REPLACE is ONLY the deep re-clone (incremental
+                # refresh) idiom over an existing registered deep
+                # clone; promising replace semantics and then failing
+                # clone_to's concurrent-create guard would mislead
+                raise ValueError(
+                    "CREATE OR REPLACE ... CLONE only refreshes an "
+                    "EXISTING registered DEEP clone (the re-clone "
+                    "idiom); "
+                    + ("SHALLOW clones track the source live and "
+                       "need no refresh — use CREATE TABLE ... "
+                       "SHALLOW CLONE for a first clone"
+                       if mode == "shallow" else
+                       f"{dest_name!r} is not a registered table — "
+                       "use CREATE TABLE ... DEEP CLONE for the "
+                       "first clone"))
+            clone = src.clone_to(
+                dest_path, version=int(v) if v is not None else None,
+                mode=mode)
+        # (re-)register: SELECTs resolve through a temp-view snapshot
+        # taken at registration time
+        self.register_txlog(dest_name, clone)
+        return self._table_ack(dest_name, dest_path, clone)
 
     @staticmethod
     def _parse_ts_operand(raw: str) -> int:
@@ -1019,20 +865,8 @@ class Engine:
                         f"VERSION AS OF takes an integer version, got "
                         f"{raw}")
                 snap = table.read(version=int(raw))
-            elif raw.startswith("'"):
-                from datetime import datetime, timezone
-                text = raw[1:-1].replace("''", "'")
-                try:
-                    dt = datetime.fromisoformat(text)
-                except ValueError:
-                    raise ValueError(
-                        f"TIMESTAMP AS OF {raw}: not epoch millis or an "
-                        "ISO-8601 timestamp (e.g. '2024-01-01 00:00:00')")
-                if dt.tzinfo is None:
-                    dt = dt.replace(tzinfo=timezone.utc)
-                snap = table.read(timestamp=int(dt.timestamp() * 1000))
             else:
-                snap = table.read(timestamp=int(raw))
+                snap = table.read(timestamp=self._parse_ts_operand(raw))
             alias = ("__tt_{}_{}_{}".format(
                 name, kind.lower(), re.sub(r"\W", "_", raw)))
             snap.createOrReplaceTempView(alias)
@@ -1077,17 +911,14 @@ class Engine:
         explicit_loc = m.group("loc") is not None
         loc = m.group("loc") or staging_dir(f"engine_ctas_{name}",
                                             self.sf_dir)
-        df = self.spark.sql(self._rewrite_time_travel(
-            m.group("select").rstrip().rstrip(";")))
+        df = self.spark.sql(self._rewrite_time_travel(m.group("select")))
         # the default staging location is engine-owned scratch (keyed to
         # name + data dir); only a USER-named LOCATION can hold someone
         # else's table, so only that path gets the exists-check
         t = TxLogTable.create(self.spark, loc, df,
                               overwrite=replace or not explicit_loc)
         self.register_txlog(name, t)
-        return self.spark.createDataFrame(
-            [(name, loc, t.latest_version())],
-            "table_name string, location string, version long")
+        return self._table_ack(name, loc, t)
 
     @staticmethod
     def _split_statements(script: str) -> list[str]:
@@ -1108,7 +939,7 @@ class Engine:
             stmts.append(tail)
         return [s for s in stmts if s]
 
-    def _txn_script(self, script: str) -> DataFrame:
+    def _txn_script(self, m: re.Match) -> DataFrame:
         """Execute ``BEGIN; stmt; …; COMMIT`` atomically PER TABLE: every
         registered txlog table stages its statements' actions
         (read-your-writes inside the script) and publishes them as ONE
@@ -1126,7 +957,7 @@ class Engine:
         the rest roll back; the raised error names both sets so the
         caller can compensate, instead of the partial commit passing
         silently."""
-        stmts = self._split_statements(script)
+        stmts = self._split_statements(m.string)
         if not stmts or not re.fullmatch(r"BEGIN", stmts[0], re.IGNORECASE):
             raise ValueError("transaction script must start with BEGIN;")
         if not re.fullmatch(r"COMMIT", stmts[-1], re.IGNORECASE):
@@ -1169,7 +1000,7 @@ class Engine:
                         "tables manually (e.g. RESTORE)") from e
                 if n:
                     acks.append((name, version, n))
-                    self._public_view(t.read()).createOrReplaceTempView(name)
+                    self._refresh_view(name, t)
         except BaseException:
             for name, t in begun:
                 try:
@@ -1180,30 +1011,12 @@ class Engine:
                     # a mid-script _dml_ack may have repointed the temp
                     # view at the STAGED snapshot; restore the committed
                     # one so nothing uncommitted stays visible
-                    self._public_view(t.read()) \
-                        .createOrReplaceTempView(name)
+                    self._refresh_view(name, t)
                 except Exception:
                     pass  # e.g. table created empty mid-script
             raise
         return self.spark.createDataFrame(
             acks or [], "table_name string, version long, statements long")
-
-    @staticmethod
-    def _split_top_level(s: str) -> list[str]:
-        """Split a select list on commas not inside parentheses."""
-        parts, depth, cur = [], 0, []
-        for ch in s:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append("".join(cur).strip())
-                cur = []
-            else:
-                cur.append(ch)
-        parts.append("".join(cur).strip())
-        return [p for p in parts if p]
 
     _MV_COUNT_ITEM = re.compile(r"^COUNT\(\s*\*\s*\)\s+AS\s+(?P<a>\w+)$",
                                 re.IGNORECASE)
@@ -1841,7 +1654,7 @@ class Engine:
         target = m.group("target")
         t = self.txlog_tables[target]
         changes = self.spark.table(m.group("src"))
-        keys = [k.strip() for k in m.group("keys").split(",")]
+        keys = _names(m.group("keys"))
         scd = int(m.group("scd") or 1)
         thex = m.group("thex")
         if thex and scd != 2:
@@ -1872,9 +1685,7 @@ class Engine:
             version = t.apply_changes_scd2(
                 changes,
                 ignore_null_updates=bool(m.group("ignulls")),
-                track_history_except_columns=(
-                    [c.strip() for c in thex.split(",")] if thex
-                    else None),
+                track_history_except_columns=_names(thex),
                 **kwargs)
         else:
             version = t.apply_changes(
@@ -1884,8 +1695,7 @@ class Engine:
 
     def _dml_ack(self, target: str, version: int) -> DataFrame:
         """Refresh the target's temp view and return the commit ack."""
-        self._public_view(
-            self.txlog_tables[target].read()).createOrReplaceTempView(target)
+        self._refresh_view(target, self.txlog_tables[target])
         return self.spark.createDataFrame(
             [(target, version)], "table_name string, version long")
 
@@ -1894,7 +1704,7 @@ class Engine:
 
         target = m.group("target")
         assignments: dict[str, str] = {}
-        for part in m.group("sets").split(","):
+        for part in self._split_top_level(m.group("sets")):
             col, eq, expr = part.partition("=")
             if not eq or not col.strip().isidentifier():
                 raise ValueError(f"unsupported UPDATE SET clause: {part!r}")
@@ -1927,11 +1737,10 @@ class Engine:
         column-list semantics."""
         target = m.group("target")
         t = self.txlog_tables[target]
-        query = m.group("query").rstrip().rstrip(";")
-        df = self.spark.sql(self._rewrite_time_travel(query))
+        df = self.spark.sql(self._rewrite_time_travel(m.group("query")))
         cols = m.group("cols")
         if cols:
-            names = [c.strip() for c in cols.split(",")]
+            names = _names(cols)
             table_cols = t.read().columns
             bad = [c for c in names if c not in table_cols]
             if bad:
@@ -1987,27 +1796,28 @@ class Engine:
             keys.append(t_key)
         return keys
 
-    def _merge_into(self, command: str, m: re.Match) -> DataFrame:
-        g = m.groupdict()
-        target, source = g["target"], g["source"]
+    def _merge_prelude(self, m: re.Match):
+        """The head both MERGE forms share: the target check, the target
+        and source alias sets, and the ON key (a list when composite)."""
+        target, source = m["target"], m["source"]
         if target not in self.txlog_tables:
             raise ValueError(
                 f"MERGE INTO target {target!r} is not a registered txlog "
                 "table (register_txlog first)")
-        t_names = {target, (g["talias"] or target)}
-        s_names = {source, (g["salias"] or source)}
-        keys = self._parse_on_keys(g["on"], t_names, s_names, command)
-        table = self.txlog_tables[target]
-        version = table.merge_upsert(
-            self.spark.table(source), keys if len(keys) > 1 else keys[0])
-        # keep subsequent SELECTs over the view consistent with the commit
-        self._public_view(table.read()).createOrReplaceTempView(target)
-        return self.spark.createDataFrame(
-            [(target, version)], "table_name string, version long")
+        t_names = {target, (m["talias"] or target)}
+        s_names = {source, (m["salias"] or source)}
+        keys = self._parse_on_keys(m["on"], t_names, s_names, m.string)
+        return t_names, s_names, keys if len(keys) > 1 else keys[0]
+
+    def _merge_into(self, m: re.Match) -> DataFrame:
+        _, _, key = self._merge_prelude(m)
+        version = self.txlog_tables[m["target"]].merge_upsert(
+            self.spark.table(m["source"]), key)
+        return self._dml_ack(m["target"], version)
 
     @staticmethod
-    def _split_top_level(s: str, sep: str = ",") -> list[str]:
-        """Split on ``sep`` outside parentheses and string literals —
+    def _split_top_level(s: str) -> list[str]:
+        """Split on commas outside parentheses and string literals —
         SET a = f(x, y), b = 2 has exactly one top-level comma."""
         out, depth, start, i, q = [], 0, 0, 0, None
         while i < len(s):
@@ -2021,28 +1831,19 @@ class Engine:
                 depth += 1
             elif ch == ")":
                 depth -= 1
-            elif ch == sep and depth == 0:
+            elif ch == "," and depth == 0:
                 out.append(s[start:i])
                 start = i + 1
             i += 1
         out.append(s[start:])
         return [p.strip() for p in out if p.strip()]
 
-    def _merge_into_full(self, command: str, m: re.Match) -> DataFrame:
+    def _merge_into_full(self, m: re.Match) -> DataFrame:
         """Full-clause MERGE → TxLogTable.merge_full.  Alias-qualified
         references in clause conditions / SET / VALUES expressions are
         rewritten onto the ``t``/``s`` struct columns merge_full
         evaluates against (so ``tgt.v < src.v`` becomes ``t.v < s.v``)."""
-        g = m.groupdict()
-        target, source = g["target"], g["source"]
-        if target not in self.txlog_tables:
-            raise ValueError(
-                f"MERGE INTO target {target!r} is not a registered txlog "
-                "table (register_txlog first)")
-        t_names = {target, (g["talias"] or target)}
-        s_names = {source, (g["salias"] or source)}
-        keys = self._parse_on_keys(g["on"], t_names, s_names, command)
-
+        t_names, s_names, key = self._merge_prelude(m)
         alias_re = re.compile(
             r"\b(" + "|".join(re.escape(a) for a in
                               sorted(t_names | s_names, key=len,
@@ -2065,11 +1866,12 @@ class Engine:
                     "neither the target nor the source alias")
             return alias_re.sub(_side, expr)
 
-        clauses_text = g["clauses"]
+        clauses_text = m["clauses"]
         starts = [c.start() for c in
                   _MERGE_CLAUSE_START_RE.finditer(clauses_text)]
         if not starts or starts[0] != 0:
-            raise ValueError(f"cannot parse MERGE clauses in {command!r}")
+            raise ValueError(
+                f"cannot parse MERGE clauses in {m.string!r}")
         pieces = [clauses_text[a:b].strip()
                   for a, b in zip(starts, starts[1:] + [len(clauses_text)])]
         matched, not_matched, by_source = [], [], []
@@ -2117,7 +1919,7 @@ class Engine:
                     if not am:
                         raise ValueError(
                             f"cannot parse MERGE action: {action!r}")
-                    cols = [c.strip() for c in am.group("cols").split(",")]
+                    cols = _names(am.group("cols"))
                     vals = self._split_top_level(am.group("vals"))
                     if len(cols) != len(vals):
                         raise ValueError(
@@ -2127,16 +1929,110 @@ class Engine:
                         {"action": "insert", "condition": cond,
                          "values": {c: rebind(v)
                                     for c, v in zip(cols, vals)}})
-        table = self.txlog_tables[target]
-        version = table.merge_full(
-            self.spark.table(source), keys if len(keys) > 1 else keys[0],
+        version = self.txlog_tables[m["target"]].merge_full(
+            self.spark.table(m["source"]), key,
             when_matched=matched, when_not_matched=not_matched,
             when_not_matched_by_source=by_source,
-            schema_evolution=bool(g.get("evolve")))
-        return self._dml_ack(target, version)
+            schema_evolution=bool(m["evolve"]))
+        return self._dml_ack(m["target"], version)
 
     def table(self, name: str) -> DataFrame:
         return self.tables[name]
+
+
+def _names(text: str | None) -> list[str] | None:
+    """``a, b`` → ``['a', 'b']``; an absent clause (None) stays None."""
+    return [c.strip() for c in text.split(",")] if text else None
+
+
+def _commit(op):
+    """Route handler for a statement that is one TxLogTable commit:
+    ``op(table, m)`` returns the new version, acked by ``_dml_ack``."""
+    def handler(engine: Engine, m: re.Match) -> DataFrame:
+        target = m["target"]
+        return engine._dml_ack(target, op(engine.txlog_tables[target], m))
+    return handler
+
+
+# Engine.sql's routing table: (statement regex, guarded group or None,
+# handler), tried in order against the stripped statement.  The first row
+# that fully matches and whose guarded group names a registered txlog
+# table wins; a failed guard moves on to the next row, and no winner
+# falls through to plain Spark SQL.  Order matters where shapes overlap:
+# EXPECT before CHECK constraints, upsert MERGE before full MERGE,
+# APPLY CHANGES FROM SNAPSHOT before the change-feed form, CTAS before
+# the empty CREATE TABLE.
+_ROUTES = [
+    (_BEGIN_RE, None, Engine._txn_script),
+    (_CTAS_TXLOG_RE, None, Engine._ctas_txlog),
+    (_MERGE_RE, None, Engine._merge_into),
+    (_MERGE_HEAD_RE, None, Engine._merge_into_full),
+    (_UPDATE_RE, "target", Engine._update),
+    (_DELETE_RE, "target", Engine._delete),
+    (_INSERT_OVERWRITE_RE, "target", Engine._insert_overwrite),
+    (_CREATE_EMPTY_RE, None, Engine._create_empty),
+    (_INSERT_RE, "target", Engine._insert_into),
+    (_RESTORE_RE, "target", _commit(lambda t, m: t.restore(
+        int(m["version"]) if m["version"] is not None
+        else t.version_at_timestamp(Engine._parse_ts_operand(m["ts"]))))),
+    (_DETAIL_RE, "target", Engine._detail),
+    (_FSCK_RE, "target", Engine._fsck),
+    (_VACUUM_RE, "target", Engine._vacuum),
+    (_ADD_EXPECTATION_RE, "target", _commit(lambda t, m: t.add_expectation(
+        m["name"], m["expr"].strip(),
+        (m["viol"] or "warn").split()[0].lower()))),
+    (_ADD_CONSTRAINT_RE, "target", _commit(lambda t, m: t.add_constraint(
+        m["name"], m["expr"].strip()))),
+    # CHECK constraints and expectations share one namespace
+    (_DROP_CONSTRAINT_RE, "target", _commit(lambda t, m: (
+        t.drop_expectation if m["name"] in t.expectations()
+        else t.drop_constraint)(m["name"]))),
+    (_RENAME_COLUMN_RE, "target", _commit(lambda t, m: t.rename_column(
+        m["old"], m["new"]))),
+    (_DROP_COLUMN_RE, "target", _commit(lambda t, m: t.drop_column(
+        m["name"]))),
+    (_ADD_COLUMN_RE, "target", _commit(lambda t, m: t.add_column(
+        m["name"], m["dtype"]))),
+    (_ALTER_TYPE_RE, "target", _commit(lambda t, m: t.alter_column_type(
+        m["name"], m["dtype"]))),
+    (_SET_DEFAULT_RE, "target", _commit(lambda t, m: t.set_column_default(
+        m["name"], m["expr"]))),
+    (_DROP_DEFAULT_RE, "target", _commit(
+        lambda t, m: t.unset_column_default(m["name"]))),
+    (_CREATE_MV_RE, "src", Engine._create_mv),
+    (_REFRESH_MV_RE, "name", Engine._refresh_mv),
+    (_SHOW_MV_RE, None, Engine._show_mvs),
+    (_DROP_MV_RE, "name", Engine._drop_mv),
+    (_APPLY_SNAPSHOT_RE, "target", Engine._apply_snapshot),
+    (_APPLY_CHANGES_RE, "target", Engine._apply_changes_stmt),
+    (_GENERATE_RE, "target", Engine._generate),
+    (_EXPIRE_SNAPSHOTS_RE, "target", Engine._expire_snapshots),
+    (_SHOW_ICEBERG_SNAPSHOTS_RE, "target", Engine._show_iceberg_snapshots),
+    (_SHOW_ICEBERG_PLAN_RE, "target", Engine._show_iceberg_plan),
+    (_ICEBERG_TAG_RE, "target", Engine._iceberg_tag),
+    (_SHOW_ICEBERG_REFS_RE, "target", Engine._show_iceberg_refs),
+    (_DROP_FEATURE_RE, "target", _commit(lambda t, m: t.drop_feature(
+        m["name"]))),
+    (_NOT_NULL_RE, "target", _commit(lambda t, m: (
+        t.set_not_null if m["action"].upper() == "SET"
+        else t.drop_not_null)(m["name"]))),
+    (_CLUSTER_BY_RE, "target", _commit(lambda t, m: t.set_cluster_by(
+        _names(m["cols"])))),
+    (_SET_PROPS_RE, "target", Engine._set_props),
+    (_UNSET_PROPS_RE, "target", _commit(lambda t, m: t.unset_properties(
+        [kv["k"] for kv in _PROP_KEY_RE.finditer(m["keys"])]))),
+    (_SHOW_PROPS_RE, "target", Engine._show_props),
+    (_SHOW_EXPECTATIONS_RE, "target", Engine._show_expectations),
+    (_SHOW_EXP_METRICS_RE, "target", Engine._show_exp_metrics),
+    (_SHOW_PARTS_RE, "target", Engine._show_partitions),
+    (_OPTIMIZE_RE, "target", _commit(lambda t, m: t.optimize_compact(
+        zorder_by=_names(m["cols"]),
+        where={m["wcol"]: m["wval"]} if m["wcol"] else None))),
+    (_REORG_RE, "target", _commit(lambda t, m: t.reorg_purge())),
+    (_COPY_INTO_RE, "target", Engine._copy_into),
+    (_HISTORY_RE, "target", Engine._history),
+    (_CLONE_RE, "src", Engine._clone),
+]
 
 
 class CommandLog:

@@ -728,6 +728,11 @@ def test_engine_sql_update_and_delete_route(spark, tdir):
     got = sorted((r["k"], r["v"])
                  for r in engine.sql("SELECT k, v FROM t_ud").collect())
     assert got == [(1, 15)]
+    # commas inside a call or a string literal do not split assignments
+    engine.sql("UPDATE t_ud SET v = coalesce(v, 0) + 1")
+    engine.sql("UPDATE t_ud SET grp = 'a,b' WHERE k = 1;")
+    got = [tuple(r) for r in engine.sql("SELECT k, grp, v FROM t_ud").collect()]
+    assert got == [(1, "a,b", 16)]
     # non-txlog UPDATE statements fall through to spark.sql and fail
     # there (no such table) rather than being swallowed by the route
     with pytest.raises(Exception):
