@@ -75,13 +75,14 @@ _MERGE_ACT_INSERT_RE = re.compile(
     r"VALUES\s*\(\s*(?P<vals>.+?)\s*\)$",
     re.IGNORECASE | re.DOTALL)
 
-# UPDATE t SET c1 = expr[, c2 = expr ...] WHERE cond — copy-on-write
-# update on a registered txlog table.  Assignments split on top-level
-# commas (commas inside parentheses or string literals stay put).
+# UPDATE t SET c1 = expr[, c2 = expr ...] [WHERE cond] — copy-on-write
+# update on a registered txlog table.  The body splits at the first
+# top-level WHERE, then the assignments at top-level commas (a WHERE or
+# comma inside parentheses or a string literal stays put).
 _UPDATE_RE = re.compile(
-    r"UPDATE\s+(?P<target>\w+)\s+SET\s+(?P<sets>.+?)"
-    r"(?:\s+WHERE\s+(?P<cond>.+?))?",
+    r"UPDATE\s+(?P<target>\w+)\s+SET\s+(?P<body>.+)",
     re.IGNORECASE | re.DOTALL)
+_WHERE_KW_RE = re.compile(r"\s+WHERE\s+", re.IGNORECASE)
 
 # DELETE FROM t [WHERE cond] — copy-on-write delete on a txlog table
 # (no WHERE = delete all rows, Delta semantics).
@@ -1702,14 +1703,19 @@ class Engine:
     def _update(self, m: re.Match) -> DataFrame:
         from pyspark.sql import functions as F
 
-        target = m.group("target")
+        target, body = m["target"], m["body"]
+        sets, cond = body, None  # no WHERE = update every row (SQL)
+        for i in self._top_level(body):
+            where = _WHERE_KW_RE.match(body, i)
+            if where:
+                sets, cond = body[:i], body[where.end():]
+                break
         assignments: dict[str, str] = {}
-        for part in self._split_top_level(m.group("sets")):
+        for part in self._split_top_level(sets):
             col, eq, expr = part.partition("=")
             if not eq or not col.strip().isidentifier():
                 raise ValueError(f"unsupported UPDATE SET clause: {part!r}")
             assignments[col.strip()] = expr.strip()
-        cond = m.group("cond")  # no WHERE = update every row (SQL)
         from .sources.txlog import sql_predicate_triples
         version = self.txlog_tables[target].update_where(
             assignments, F.expr(cond) if cond else F.lit(True),
@@ -1816,12 +1822,11 @@ class Engine:
         return self._dml_ack(m["target"], version)
 
     @staticmethod
-    def _split_top_level(s: str) -> list[str]:
-        """Split on commas outside parentheses and string literals —
-        SET a = f(x, y), b = 2 has exactly one top-level comma."""
-        out, depth, start, i, q = [], 0, 0, 0, None
-        while i < len(s):
-            ch = s[i]
+    def _top_level(s: str):
+        """Yield the index of every character of ``s`` outside string
+        literals and parentheses (quotes and parentheses excluded)."""
+        depth, q = 0, None
+        for i, ch in enumerate(s):
             if q:
                 if ch == q:
                     q = None
@@ -1831,10 +1836,18 @@ class Engine:
                 depth += 1
             elif ch == ")":
                 depth -= 1
-            elif ch == "," and depth == 0:
+            elif depth == 0:
+                yield i
+
+    @classmethod
+    def _split_top_level(cls, s: str) -> list[str]:
+        """Split on commas outside parentheses and string literals —
+        SET a = f(x, y), b = 2 has exactly one top-level comma."""
+        out, start = [], 0
+        for i in cls._top_level(s):
+            if s[i] == ",":
                 out.append(s[start:i])
                 start = i + 1
-            i += 1
         out.append(s[start:])
         return [p.strip() for p in out if p.strip()]
 

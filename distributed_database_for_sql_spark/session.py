@@ -39,6 +39,12 @@ def get_spark(app_name: str = "distributed_database_for_sql_spark",
         # evaluations with accumulators, which over-count under
         # speculative re-execution (ADVICE r14)
         .config("spark.speculation", "false")
+        # Spark's default of 100 entries is smaller than the generated-class
+        # working set of repeated queries (~180 classes for eleven TPC-H
+        # reads, ~4,000 for the whole registry), so each repeat evicted and
+        # recompiled it. Of 500/1000/5000, only 5000 holds the registry's
+        # set, without a rise in GC time. Static: fixed at session build.
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -64,6 +70,15 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
       session (200 partitions, possibly no AQE) doesn't run the small-SF
       oracle suite with 200 near-empty tasks per shuffle (speed only;
       results are partitioning-independent).
+
+    It cannot size the generated-code cache: ``spark.sql.codegen.cache.
+    maxEntries`` is a static SQL conf (``spark.conf.set`` raises
+    CANNOT_MODIFY_STATIC_CONFIG), so a session built elsewhere — the
+    driver's, through ``__spark_entry__.py`` — keeps whatever it was
+    launched with, by default Spark's 100 entries, and recompiles evicted
+    classes on repeated queries. Launch such a session with
+    ``--conf spark.sql.codegen.cache.maxEntries=<n>``, ``n`` as in
+    ``get_spark``, to get the warm-query behaviour.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

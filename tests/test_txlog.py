@@ -733,6 +733,12 @@ def test_engine_sql_update_and_delete_route(spark, tdir):
     engine.sql("UPDATE t_ud SET grp = 'a,b' WHERE k = 1;")
     got = [tuple(r) for r in engine.sql("SELECT k, grp, v FROM t_ud").collect()]
     assert got == [(1, "a,b", 16)]
+    # a WHERE inside a string literal or parentheses does not end SET
+    engine.sql("UPDATE t_ud SET grp = 'late where due' WHERE k = 1")
+    engine.sql("UPDATE t_ud SET v = coalesce((SELECT max(v) FROM t_ud "
+               "WHERE k = 1), 0) + 1 WHERE k = 1")
+    got = [tuple(r) for r in engine.sql("SELECT k, grp, v FROM t_ud").collect()]
+    assert got == [(1, "late where due", 17)]
     # non-txlog UPDATE statements fall through to spark.sql and fail
     # there (no such table) rather than being swallowed by the route
     with pytest.raises(Exception):
