@@ -86,6 +86,7 @@ that make real Delta viable at scale.
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import functools
 import glob
@@ -830,11 +831,7 @@ class TxLogTable:
                 return self.latest_version()
             if v > base_version + 1:
                 active, _ = self._snapshot_files()
-                active_rel = {
-                    os.path.relpath(os.path.normpath(p),
-                                    os.path.normpath(self.path))
-                    for p in active
-                }
+                active_rel = {self._rel(p) for p in active}
                 gone = [p for p in removed if p not in active_rel]
                 if gone:
                     raise RuntimeError(
@@ -901,6 +898,47 @@ class TxLogTable:
                 self._maybe_checkpoint(v)
                 self._maybe_uniform()
                 return v
+
+    def _rel(self, p: str) -> str:
+        """Table-relative form of a data path under ``self.path`` (the
+        form ``remove``/``add`` actions record)."""
+        return os.path.relpath(os.path.normpath(p),
+                               os.path.normpath(self.path))
+
+    def _commit_rewrite(self, op: str, base_version: int,
+                        removed: list[str], rows: DataFrame,
+                        changes=None, *, commit: dict | None = None,
+                        actions=(), key_range=None,
+                        txn: tuple[str, int] | None = None) -> int:
+        """The shared tail of every copy-on-write statement: write
+        ``rows`` as new segments, write the change rows when the table
+        has CDF on, then commit — under OCC against ``base_version`` —
+        the removal of ``removed`` (paths of the rewritten segments) and
+        the new segments as ONE version.
+
+        ``changes`` is a zero-argument callable returning the change
+        rows, so a table without CDF never plans them.  The commit
+        record always carries ``filesRewritten``/``filesAdded`` plus the
+        key range (when given) and the op's own ``commit`` fields.
+        Action order: commit, ``txn`` (when given), the op's ``actions``
+        (identity, schema evolution, SCD2 marks), removes, adds, cdf."""
+        rel_new = self._write_segments(rows)
+        cdf = ([] if changes is None or not self.enable_cdf else
+               [{"cdf": {"path": self._write_change_data(changes())}}])
+        rel_removed = [self._rel(p) for p in removed]
+        head = {"op": op, "ts": self._next_ts(),
+                "filesRewritten": len(rel_removed),
+                "filesAdded": len(rel_new)}
+        if key_range is not None:
+            head.update(self._key_range_commit(key_range))
+        head.update(commit or {})
+        txn_action = ([] if txn is None else
+                      [{"txn": {"appId": txn[0], "version": int(txn[1])}}])
+        return self._commit_with_occ(
+            [{"commit": head}] + txn_action + list(actions)
+            + [{"remove": {"path": p}} for p in rel_removed]
+            + self._add_actions(rel_new) + cdf,
+            rel_removed, base_version, key_range=key_range, txn=txn)
 
     # -- checkpointing (Delta's _last_checkpoint pattern) ---------------------
 
@@ -2353,7 +2391,7 @@ class TxLogTable:
             return pending
         return self._meta_state().get("identityColumns", {})
 
-    def _assign_identity(self, df: DataFrame):
+    def _assign_identity(self, df: DataFrame, pin):
         """Delta ``GENERATED ALWAYS AS IDENTITY`` write semantics:
         identity columns must be ABSENT from the incoming rows (always
         engine-assigned — explicit values raise, like Delta) and are
@@ -2366,14 +2404,15 @@ class TxLogTable:
         ``mapInPandas`` stamps each partition's contiguous id range from
         the broadcast offsets — the standard dense-id pattern at scale
         (a global row_number() would funnel everything through one
-        partition).  Returns (df, identity actions, cleanup) — cleanup
-        unpersists and must run AFTER the segment write.  Concurrency:
+        partition).  Returns (df, identity actions); the write set is
+        persisted through ``pin`` (see ``_pinned``), whose scope must
+        span the segment write.  Concurrency:
         allocation assumes one writer per table at a time (same posture
         as COPY INTO racing); OCC still serializes the commits
         themselves."""
         defs = self._identity_columns()
         if not defs:
-            return df, [], None
+            return df, []
         provided = sorted(set(defs) & set(df.columns))
         bad = [c for c in provided if defs[c].get("always", True)]
         if bad:
@@ -2392,7 +2431,7 @@ class TxLogTable:
         # rewritten+inserts) shifts task partition ids by the other
         # side's partition count, which would silently mis-bind every
         # offset (duplicate ids); a column rides the rows and is immune.
-        df = df.withColumn("__id_pid", F.spark_partition_id()).persist()
+        df = pin(df.withColumn("__id_pid", F.spark_partition_id()))
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in null_cols:
             aggs.append(F.sum(F.col(c).isNull().cast("long"))
@@ -2475,7 +2514,7 @@ class TxLogTable:
             if hw is not None:
                 actions.append(
                     {"identity": {"column": c, "highWater": hw}})
-        return out, actions, (lambda: df.unpersist())
+        return out, actions
 
     def _widen_cast(self, df: DataFrame) -> DataFrame:
         """After ALTER COLUMN TYPE, incoming frames may still carry the
@@ -2692,40 +2731,38 @@ class TxLogTable:
             # which does not exist yet at CREATE: pre-commit the metaData
             # via an instance attribute override.
             t._pending_partition_columns = parts
-        ident_actions: list = []
-        ident_cleanup = None
-        if identity_columns:
-            # Delta GENERATED ALWAYS AS IDENTITY: {"id": {"start": 1,
-            # "step": 1}} (int shorthand = start, step 1); step >= 1 in
-            # v1.  The identity column is engine-assigned from CREATE on
-            # and joins the schema as a non-null long.  "always": False
-            # = GENERATED BY DEFAULT AS IDENTITY — explicit values are
-            # accepted and only absent/NULL slots are engine-assigned.
-            defs = {}
-            for c, spec in identity_columns.items():
-                if isinstance(spec, int):
-                    spec = {"start": spec, "step": 1}
-                if int(spec.get("step", 1)) < 1:
-                    raise ValueError(
-                        f"identity column {c!r}: step must be >= 1")
-                defs[c] = {"start": int(spec.get("start", 1)),
-                           "step": int(spec.get("step", 1)),
-                           "always": bool(spec.get("always", True))}
-            t._pending_identity_columns = defs
-            meta["identityColumns"] = defs
-            df, ident_actions, ident_cleanup = t._assign_identity(df)
-            meta["schemaJson"] = df.schema.json()
-        if column_mapping_mode == "id":
-            # every column gets an opaque physical id from birth; files
-            # never carry a logical name, so drop + re-introduce is safe
-            mapping = {f.name: cls._new_physical_id()
-                       for f in df.schema.fields}
-            meta["columnMapping"] = mapping
-            meta["columnMappingMode"] = "id"
-            t._pending_column_mapping = mapping
-        rel = t._write_segments(df)
-        if ident_cleanup:
-            ident_cleanup()
+        with t._pinned() as pin:
+            ident_actions: list = []
+            if identity_columns:
+                # Delta GENERATED ALWAYS AS IDENTITY: {"id": {"start": 1,
+                # "step": 1}} (int shorthand = start, step 1); step >= 1 in
+                # v1.  The identity column is engine-assigned from CREATE on
+                # and joins the schema as a non-null long.  "always": False
+                # = GENERATED BY DEFAULT AS IDENTITY — explicit values are
+                # accepted and only absent/NULL slots are engine-assigned.
+                defs = {}
+                for c, spec in identity_columns.items():
+                    if isinstance(spec, int):
+                        spec = {"start": spec, "step": 1}
+                    if int(spec.get("step", 1)) < 1:
+                        raise ValueError(
+                            f"identity column {c!r}: step must be >= 1")
+                    defs[c] = {"start": int(spec.get("start", 1)),
+                               "step": int(spec.get("step", 1)),
+                               "always": bool(spec.get("always", True))}
+                t._pending_identity_columns = defs
+                meta["identityColumns"] = defs
+                df, ident_actions = t._assign_identity(df, pin)
+                meta["schemaJson"] = df.schema.json()
+            if column_mapping_mode == "id":
+                # every column gets an opaque physical id from birth; files
+                # never carry a logical name, so drop + re-introduce is safe
+                mapping = {f.name: cls._new_physical_id()
+                           for f in df.schema.fields}
+                meta["columnMapping"] = mapping
+                meta["columnMappingMode"] = "id"
+                t._pending_column_mapping = mapping
+            rel = t._write_segments(df)
         if identity_columns:
             del t._pending_identity_columns
         if column_mapping_mode == "id":
@@ -3172,15 +3209,14 @@ class TxLogTable:
         df = self._fill_defaults(df)
         df = self._apply_generated(df)
         df, exp_commit = self._apply_expectations(df)
-        df, ident_actions, ident_cleanup = self._assign_identity(df)
-        self._validate_constraints(df)
-        # evolution guard BEFORE the segment write: a refused column
-        # (retired / vacated-physical clash) must fail loudly here, not
-        # crash mid-write on a duplicate physical name
-        evolution = self._schema_evolution_action(df)
-        rel = self._write_segments(df)
-        if ident_cleanup:
-            ident_cleanup()
+        with self._pinned() as pin:
+            df, ident_actions = self._assign_identity(df, pin)
+            self._validate_constraints(df)
+            # evolution guard BEFORE the segment write: a refused column
+            # (retired / vacated-physical clash) must fail loudly here,
+            # not crash mid-write on a duplicate physical name
+            evolution = self._schema_evolution_action(df)
+            rel = self._write_segments(df)
         txn_actions = ([] if txn_app_id is None else
                        [{"txn": {"appId": txn_app_id,
                                  "version": int(txn_version)}}])
@@ -3316,9 +3352,7 @@ class TxLogTable:
         # rival's removal and raise a spurious conflict on any commuting
         # concurrent commit (ADVICE r7).
         begin_active = self._snapshot_files(base)[0] if base >= 0 else []
-        begin_rel = {
-            os.path.relpath(os.path.normpath(p), os.path.normpath(self.path))
-            for p in begin_active}
+        begin_rel = {self._rel(p) for p in begin_active}
         removed = [p for p in removed if p in begin_rel]
         txn_domains = sorted({d for s in staged
                               for d in s.get("domains", [])})
@@ -4167,6 +4201,71 @@ class TxLogTable:
         return ({"keyRange": key_range} if isinstance(key_range, dict)
                 else {"keyRanges": key_range})
 
+    @contextlib.contextmanager
+    def _pinned(self):
+        """Statement-scoped caching: yields ``pin(frame)``, which
+        persists a frame that is not cached yet and returns it.  Every
+        frame pinned through it — the statement's working sets and the
+        identity write sets ``_assign_identity`` persists — is released
+        on EVERY exit, so a refused or failed write leaves no cached
+        frame behind."""
+        with contextlib.ExitStack() as stack:
+            def pin(frame: DataFrame) -> DataFrame:
+                if not frame.is_cached:
+                    frame = frame.persist()
+                    stack.callback(frame.unpersist)
+                return frame
+            yield pin
+
+    @staticmethod
+    def _touched_files(frame: DataFrame) -> list[str]:
+        """The segments a copy-on-write statement rewrites: sorted
+        distinct ``_file`` of the probe ``frame``, in one collect."""
+        return sorted(r["_file"] for r in
+                      frame.select("_file").distinct().collect())
+
+    def _replace_keys(self, touched: list[str], keys: list[str],
+                      key_frame: DataFrame, rows: DataFrame) -> DataFrame:
+        """Keyed-replace rewrite (MERGE upsert, APPLY CHANGES): the
+        touched segments' rows whose key is NOT in ``key_frame``, plus
+        ``rows``.  Under row tracking a replacing row keeps the matched
+        target row's id (same logical row); rows of new keys carry a
+        NULL ``__rid`` and read fresh base+position ids."""
+        if not touched:
+            return rows
+        seg = self._read_active_tracked(only=touched)
+        if self._row_tracking_enabled():
+            idmap = (seg.join(F.broadcast(key_frame), keys, "left_semi")
+                     .select(*keys, "__rid"))
+            rows = rows.join(F.broadcast(idmap), keys, "left")
+        # allowMissingColumns: rewriting a pre-evolution segment must
+        # not drop (or trip over) columns added later.
+        return (seg.join(F.broadcast(key_frame), keys, "left_anti")
+                .unionByName(rows, allowMissingColumns=True))
+
+    def _update_images(self, assignments: dict, columns: list):
+        """UPDATE's post-image builder, shared by both strategies: turns
+        ``assignments`` into expressions, runs the shared guards, and
+        returns ``post(frame, hit=None)`` — the assignments followed by
+        the generated-column recompute (so an UPDATE of a dependency
+        never leaves a stale derived value), applied to every row, or
+        only where the boolean column ``hit`` is TRUE."""
+        exprs = {c: (F.expr(e) if isinstance(e, str) else e)
+                 for c, e in assignments.items()}
+        self._check_update_assignments(exprs, columns)
+        gen = {name: F.expr(expr)
+               for name, expr in self._generated_columns().items()}
+
+        def post(frame: DataFrame, hit=None) -> DataFrame:
+            for step in (exprs, gen):
+                if step:
+                    frame = frame.withColumns(
+                        step if hit is None else
+                        {c: F.when(hit, e).otherwise(F.col(c))
+                         for c, e in step.items()})
+            return frame
+        return post
+
     def merge_upsert(self, updates: DataFrame, key) -> int:
         """Copy-on-write MERGE (upsert): rows of ``updates`` replace
         same-key rows; unmatched update rows are inserted.  ``key``:
@@ -4219,18 +4318,14 @@ class TxLogTable:
         # touched-file semi-join, the rewrite union, CDF images).
         # Persist for the statement's duration — bounded by the broadcast
         # bound, so scale-safe.
-        upd_cached = not updates.is_cached
-        if upd_cached:
-            updates = updates.persist()
-        upd_handle = updates
-        try:
+        with self._pinned() as pin:
+            updates = pin(updates)
             ranges, _ = self._key_range_stats(updates, keys, "MERGE")
             key_range = ranges[0] if len(ranges) == 1 else ranges
             # CHECK constraints gate the incoming rows only — carried-over
             # segment rows already passed at their own write time.
             updates = self._apply_generated(updates)
-            updates, ident_actions, ident_cleanup = \
-                self._assign_identity(updates)
+            updates, ident_actions = self._assign_identity(updates, pin)
             self._validate_constraints(updates)
             upd_keys = updates.select(*keys).distinct()
             touched: list[str] = []
@@ -4242,83 +4337,39 @@ class TxLogTable:
                 # plain-equality join rejects NULL keys, so the non-NULL
                 # [min, max] prune is sound; guide §6).
                 cand = self._key_probe_candidates(ranges)
-                base = self._read_active(with_file=True, only=cand)
-                touched_rows = (
-                    base.join(F.broadcast(upd_keys), keys, "left_semi")
-                    .select("_file").distinct().collect()
-                )
-                touched = sorted(r["_file"] for r in touched_rows)
-            if touched:
-                # allowMissingColumns: rewriting a pre-evolution segment
-                # must not drop (or trip over) columns added later.
-                seg = self._read_active_tracked(only=touched)
-                keep_base = seg.join(F.broadcast(upd_keys), keys,
-                                     "left_anti")
-                write_updates = updates
-                if self._row_tracking_enabled():
-                    # an updated row keeps the matched target row's id (it
-                    # is the same logical row); the insert arm stays NULL
-                    # __rid and reads fresh base+position ids
-                    idmap = (seg.join(F.broadcast(upd_keys), keys,
-                                      "left_semi")
-                             .select(*keys, "__rid"))
-                    write_updates = updates.join(F.broadcast(idmap), keys,
-                                                 "left")
-                merged = keep_base.unionByName(write_updates,
-                                               allowMissingColumns=True)
-            else:
-                merged = updates
-            rel_new = self._write_segments(merged)
-            cdf_actions: list[dict] = []
-            if self.enable_cdf:
+                touched = self._touched_files(
+                    self._read_active(with_file=True, only=cand)
+                    .join(F.broadcast(upd_keys), keys, "left_semi"))
+
+            def changes() -> DataFrame:
                 # Change rows are computed from the TOUCHED segments only
                 # — the same bounded working set the merge itself
                 # rewrites.
                 ct = F.lit("insert")
-                if touched:
-                    pre = (self._read_active(only=touched)
-                           .join(F.broadcast(upd_keys), keys, "left_semi"))
-                    matched_keys = pre.select(*keys).distinct()
-                    post = updates.join(F.broadcast(matched_keys), keys,
-                                        "left_semi")
-                    ins = updates.join(F.broadcast(matched_keys), keys,
-                                       "left_anti")
-                    changes = (
-                        pre.withColumn("_change_type",
-                                       F.lit("update_preimage"))
-                        .unionByName(
-                            post.withColumn("_change_type",
-                                            F.lit("update_postimage")),
-                            allowMissingColumns=True)
-                        .unionByName(ins.withColumn("_change_type", ct),
-                                     allowMissingColumns=True))
-                else:
-                    changes = updates.withColumn("_change_type", ct)
-                cdf_actions = [
-                    {"cdf": {"path": self._write_change_data(changes)}}]
-            rel_removed = [
-                os.path.relpath(os.path.normpath(p),
-                                os.path.normpath(self.path))
-                for p in touched
-            ]
-            if ident_cleanup:
-                ident_cleanup()
-            actions = (
-                [{"commit": {"op": "MERGE", "ts": self._next_ts(),
-                             "filesRewritten": len(rel_removed),
-                             "filesAdded": len(rel_new),
-                             **self._key_range_commit(key_range)}}]
-                + ident_actions
-                + self._schema_evolution_action(updates)
-                + [{"remove": {"path": p}} for p in rel_removed]
-                + self._add_actions(rel_new)
-                + cdf_actions
-            )
-            return self._commit_with_occ(actions, rel_removed, base_version,
-                                         key_range=key_range)
-        finally:
-            if upd_cached:
-                upd_handle.unpersist()
+                if not touched:
+                    return updates.withColumn("_change_type", ct)
+                pre = (self._read_active(only=touched)
+                       .join(F.broadcast(upd_keys), keys, "left_semi"))
+                matched_keys = pre.select(*keys).distinct()
+                post = updates.join(F.broadcast(matched_keys), keys,
+                                    "left_semi")
+                ins = updates.join(F.broadcast(matched_keys), keys,
+                                   "left_anti")
+                return (
+                    pre.withColumn("_change_type", F.lit("update_preimage"))
+                    .unionByName(
+                        post.withColumn("_change_type",
+                                        F.lit("update_postimage")),
+                        allowMissingColumns=True)
+                    .unionByName(ins.withColumn("_change_type", ct),
+                                 allowMissingColumns=True))
+
+            return self._commit_rewrite(
+                "MERGE", base_version, touched,
+                self._replace_keys(touched, keys, upd_keys, updates),
+                changes, key_range=key_range,
+                actions=ident_actions
+                + self._schema_evolution_action(updates))
 
     def merge_full(self, source: DataFrame, key,
                    when_matched: list[dict] | tuple = (),
@@ -4363,10 +4414,13 @@ class TxLogTable:
         rewritten — a matched row whose conditions all fail leaves its
         segment untouched.  A by-source clause with a broad condition
         legitimately touches every segment holding such rows; that cost
-        is inherent to the semantics, not the plan.  Same OCC surface
-        as ``merge_upsert`` (key-range recorded, removed files
-        conflict-checked); CDF emits insert/delete/update pre+post
-        images per arm.
+        is inherent to the semantics, not the plan.  The OCC surface is
+        the one every copy-on-write statement shares: ``_touched_files``
+        probes the segments to rewrite, and ``_commit_rewrite`` writes
+        them, writes the CDF rows (insert/delete/update pre+post images
+        per arm) and commits with the key range recorded and the
+        removed files conflict-checked; ``_pinned`` scopes the cached
+        source and insert arm to the statement.
 
         ``schema_evolution=True`` (Delta's ``WITH SCHEMA EVOLUTION``):
         source columns absent from the target evolve the table schema
@@ -4442,11 +4496,8 @@ class TxLogTable:
         # write, CDF write).  Persist it for the statement's duration so
         # the fold runs once; bounded by the broadcast bound, so this is
         # scale-safe (guide §5: reuse × recompute-cost).
-        src_cached = not source.is_cached
-        if src_cached:
-            source = source.persist()
-        inserts = None
-        try:
+        with self._pinned() as pin:
+            source = pin(source)
             ranges, had_null_keys = self._key_range_stats(
                 source, keys, "MERGE")
             key_range = ranges[0] if len(ranges) == 1 else ranges
@@ -4514,10 +4565,8 @@ class TxLogTable:
                     if not when_not_matched_by_source and not had_null_keys
                     else None)
             base = read_base(cand)
-            decided = decide(base)
-            touched = sorted(
-                r["_file"] for r in decided.filter(F.col("_act") != -1)
-                .select("_file").distinct().collect())
+            touched = self._touched_files(
+                decide(base).filter(F.col("_act") != -1))
             # Every pass below that looks at rows whose clause fired re-reads
             # ONLY the touched segments (the merge's bounded working set)
             # instead of filtering a full-snapshot scan — the rewrite, the
@@ -4639,8 +4688,7 @@ class TxLogTable:
                     inserts = inserts.unionByName(fr, allowMissingColumns=True)
                 # BY DEFAULT identity: NULL/absent slots engine-assigned past
                 # the high-water mark (ALWAYS tables were refused above)
-                inserts, ident_actions, ident_cleanup = \
-                    self._assign_identity(inserts)
+                inserts, ident_actions = self._assign_identity(inserts, pin)
                 self._validate_constraints(inserts)
                 # Bounded by the source (anti-join of it), evaluated up to
                 # two more times below (segment write, CDF) — and each bare
@@ -4648,9 +4696,9 @@ class TxLogTable:
                 # full snapshot just to rebuild its broadcast.  Persist for
                 # the statement's duration (after validation, so a refused
                 # batch never pins cache).
-                inserts = inserts.persist()
+                inserts = pin(inserts)
             else:
-                ident_actions, ident_cleanup = [], None
+                ident_actions = []
 
             if not touched and inserts is None:
                 return self.latest_version()
@@ -4660,12 +4708,8 @@ class TxLogTable:
                                                allowMissingColumns=True)
             else:
                 merged = rewritten if rewritten is not None else inserts
-            rel_new = self._write_segments(merged)
-            if ident_cleanup:
-                ident_cleanup()
 
-            cdf_actions: list[dict] = []
-            if self.enable_cdf:
+            def changes() -> DataFrame:
                 parts = []
                 if touched:
                     rw = decided_t
@@ -4689,44 +4733,21 @@ class TxLogTable:
                 if inserts is not None:
                     parts.append(
                         inserts.withColumn("_change_type", F.lit("insert")))
-                changes = parts[0]
+                ch = parts[0]
                 for p in parts[1:]:
-                    changes = changes.unionByName(p,
-                                                  allowMissingColumns=True)
-                cdf_actions = [
-                    {"cdf": {"path": self._write_change_data(changes)}}]
+                    ch = ch.unionByName(p, allowMissingColumns=True)
+                return ch
 
-            rel_removed = [
-                os.path.relpath(os.path.normpath(p),
-                                os.path.normpath(self.path))
-                for p in touched
-            ]
-            actions = (
-                [{"commit": {"op": "MERGE", "ts": self._next_ts(),
-                             "filesRewritten": len(rel_removed),
-                             "filesAdded": len(rel_new),
-                             **self._key_range_commit(key_range),
-                             "clauses": {
-                                 "matched": len(when_matched),
-                                 "notMatched": len(when_not_matched),
-                                 "notMatchedBySource":
-                                     len(when_not_matched_by_source)}}}]
-                + ([] if txn_app_id is None else
-                   [{"txn": {"appId": txn_app_id,
-                             "version": int(txn_version)}}])
-                + ident_actions
-                + evo_actions
-                + [{"remove": {"path": p}} for p in rel_removed]
-                + self._add_actions(rel_new)
-                + cdf_actions
-            )
-            return self._commit_with_occ(actions, rel_removed, base_version,
-                                         key_range=key_range)
-        finally:
-            if inserts is not None:
-                inserts.unpersist()
-            if src_cached:
-                source.unpersist()
+            return self._commit_rewrite(
+                "MERGE", base_version, touched, merged, changes,
+                key_range=key_range,
+                commit={"clauses": {
+                    "matched": len(when_matched),
+                    "notMatched": len(when_not_matched),
+                    "notMatchedBySource": len(when_not_matched_by_source)}},
+                txn=(None if txn_app_id is None
+                     else (txn_app_id, txn_version)),
+                actions=ident_actions + evo_actions)
 
     def delete_where(self, condition, use_dv: bool = False,
                      prune: list[tuple] | None = None) -> int:
@@ -4761,35 +4782,18 @@ class TxLogTable:
         if not files:
             raise FileNotFoundError("empty table")
         cand = self.prune_files(list(prune))[0] if prune else None
-        base = self._read_active(with_file=True, only=cand)
-        touched = sorted(
-            r["_file"]
-            for r in base.filter(condition).select("_file").distinct().collect()
-        )
+        touched = self._touched_files(
+            self._read_active(with_file=True, only=cand).filter(condition))
         if not touched:
             return self.latest_version()
+        cond = F.coalesce(condition, F.lit(False))
         # tracked read: surviving rows keep their row ids through the
         # rewrite (copy-on-write DELETE never changes surviving rows)
-        survivors = (self._read_active_tracked(only=touched)
-                     .filter(~F.coalesce(condition, F.lit(False))))
-        rel_new = self._write_segments(survivors)
-        cdf_actions: list[dict] = []
-        if self.enable_cdf:
-            deleted = (self._read_active(only=touched)
-                       .filter(F.coalesce(condition, F.lit(False)))
-                       .withColumn("_change_type", F.lit("delete")))
-            cdf_actions = [{"cdf": {"path": self._write_change_data(deleted)}}]
-        rel_removed = [
-            os.path.relpath(os.path.normpath(p), os.path.normpath(self.path))
-            for p in touched
-        ]
-        actions = (
-            [{"commit": {"op": "DELETE", "ts": self._next_ts()}}]
-            + [{"remove": {"path": p}} for p in rel_removed]
-            + self._add_actions(rel_new)
-            + cdf_actions
-        )
-        return self._commit_with_occ(actions, rel_removed, base_version)
+        return self._commit_rewrite(
+            "DELETE", base_version, touched,
+            self._read_active_tracked(only=touched).filter(~cond),
+            lambda: (self._read_active(only=touched).filter(cond)
+                     .withColumn("_change_type", F.lit("delete"))))
 
     def insert_overwrite(self, df: DataFrame,
                          partitions: dict | None = None) -> int:
@@ -4836,21 +4840,21 @@ class TxLogTable:
         else:
             removed = list(active)
         df = self._apply_generated(df)
-        df, ident_actions, ident_cleanup = self._assign_identity(df)
-        self._validate_constraints(df)
-        cdf_actions: list[dict] = []
-        if self.enable_cdf:
-            old = (self._read_active(
-                only=[os.path.join(self.path, p) for p in removed])
-                .withColumn("_change_type", F.lit("delete"))
-                if removed else None)
-            new = df.withColumn("_change_type", F.lit("insert"))
-            changes = (old.unionByName(new, allowMissingColumns=True)
-                       if old is not None else new)
-            cdf_actions = [{"cdf": {"path": self._write_change_data(changes)}}]
-        rel_new = self._write_segments(df)
-        if ident_cleanup:
-            ident_cleanup()
+        with self._pinned() as pin:
+            df, ident_actions = self._assign_identity(df, pin)
+            self._validate_constraints(df)
+            cdf_actions: list[dict] = []
+            if self.enable_cdf:
+                old = (self._read_active(
+                    only=[os.path.join(self.path, p) for p in removed])
+                    .withColumn("_change_type", F.lit("delete"))
+                    if removed else None)
+                new = df.withColumn("_change_type", F.lit("insert"))
+                changes = (old.unionByName(new, allowMissingColumns=True)
+                           if old is not None else new)
+                cdf_actions = [
+                    {"cdf": {"path": self._write_change_data(changes)}}]
+            rel_new = self._write_segments(df)
         commit: dict = {"op": "OVERWRITE", "ts": self._next_ts(),
                         "filesRemoved": len(removed),
                         "filesAdded": len(rel_new)}
@@ -4918,73 +4922,33 @@ class TxLogTable:
             raise FileNotFoundError("empty table")
         cond = F.coalesce(condition, F.lit(False))
         cand = self.prune_files(list(prune))[0] if prune else None
-        base = self._read_active(with_file=True, only=cand)
-        touched = sorted(
-            r["_file"]
-            for r in base.filter(cond).select("_file").distinct().collect())
+        touched = self._touched_files(
+            self._read_active(with_file=True, only=cand).filter(cond))
         if not touched:
             return self.latest_version()
         # tracked read: carried AND updated rows keep their row ids
         # through the rewrite (an updated row is the same logical row)
         seg = self._read_active_tracked(only=touched)
-        exprs = {c: (F.expr(e) if isinstance(e, str) else e)
-                 for c, e in assignments.items()}
-        self._check_update_assignments(exprs, seg.columns)
-        gen = self._generated_columns()
+        post = self._update_images(assignments, seg.columns)
         # The match flag is materialized BEFORE assignments: both the
-        # assignment guards and the generated-column recompute below
-        # must test the PRE-update predicate (an assignment that changes
-        # a predicate column would otherwise flip the guard mid-row).
-        marked = seg.withColumn("__upd", cond)
-        updated = marked.withColumns(
-            {c: F.when(F.col("__upd"), e).otherwise(F.col(c))
-             for c, e in exprs.items()})
-        # generated columns are recomputed for the updated rows, so an
-        # UPDATE of a dependency can never leave a stale derived value
-        # (Delta recomputes on write for exactly this reason)
-        if gen:
-            updated = updated.withColumns(
-                {name: F.when(F.col("__upd"), F.expr(expr))
-                       .otherwise(F.col(name))
-                 for name, expr in gen.items()})
-        updated = updated.drop("__upd")
-        def _post_images(base: DataFrame) -> DataFrame:
-            """Assignments + generated-column recompute applied to the
-            PRE-filtered rows (filtering `updated` by cond would
-            re-evaluate the predicate on post-update values)."""
-            out = base.withColumns(exprs)
-            if gen:
-                out = out.withColumns(
-                    {name: F.expr(expr) for name, expr in gen.items()})
-            return out
-
+        # assignment guards and the generated-column recompute must test
+        # the PRE-update predicate (an assignment that changes a
+        # predicate column would otherwise flip the guard mid-row).
+        # Post-images of the matched rows are built from the PRE-filtered
+        # rows for the same reason.
+        updated = post(seg.withColumn("__upd", cond),
+                       F.col("__upd")).drop("__upd")
         # post-update images must still satisfy the CHECK constraints
-        self._validate_constraints(_post_images(seg.filter(cond)))
-        rel_new = self._write_segments(updated)
-        cdf_actions: list[dict] = []
-        if self.enable_cdf:
-            post = _post_images(seg.filter(cond))
-            changes = (
-                self._drop_rid(seg.filter(cond))
-                .withColumn("_change_type", F.lit("update_preimage"))
-                .unionByName(
-                    self._drop_rid(post)
-                    .withColumn("_change_type", F.lit("update_postimage")),
-                    allowMissingColumns=True))
-            cdf_actions = [{"cdf": {"path": self._write_change_data(changes)}}]
-        rel_removed = [
-            os.path.relpath(os.path.normpath(p), os.path.normpath(self.path))
-            for p in touched
-        ]
-        actions = (
-            [{"commit": {"op": "UPDATE", "ts": self._next_ts(),
-                         "filesRewritten": len(rel_removed),
-                         "filesAdded": len(rel_new)}}]
-            + [{"remove": {"path": p}} for p in rel_removed]
-            + self._add_actions(rel_new)
-            + cdf_actions
-        )
-        return self._commit_with_occ(actions, rel_removed, base_version)
+        self._validate_constraints(post(seg.filter(cond)))
+        return self._commit_rewrite(
+            "UPDATE", base_version, touched, updated,
+            lambda: (self._drop_rid(seg.filter(cond))
+                     .withColumn("_change_type", F.lit("update_preimage"))
+                     .unionByName(
+                         self._drop_rid(post(seg.filter(cond)))
+                         .withColumn("_change_type",
+                                     F.lit("update_postimage")),
+                         allowMissingColumns=True)))
 
     def _dv_protocol_actions(self) -> list[dict]:
         """First DV on a table: upgrade the protocol to (3, 7) AND list
@@ -5128,17 +5092,7 @@ class TxLogTable:
         if not targets:
             return self.latest_version()
         pre = matches.drop("__relfile", "__rowidx")
-        exprs = {c: (F.expr(e) if isinstance(e, str) else e)
-                 for c, e in assignments.items()}
-        self._check_update_assignments(exprs, pre.columns)
-        gen = self._generated_columns()
-        post = pre.withColumns(exprs)
-        if gen:
-            # recompute derived values so an UPDATE of a dependency can
-            # never leave a stale generated column (same as the
-            # copy-on-write path)
-            post = post.withColumns(
-                {name: F.expr(expr) for name, expr in gen.items()})
+        post = self._update_images(assignments, pre.columns)(pre)
         self._validate_constraints(post)
         rel_new = self._write_segments(post)
         dv_rel = self._write_dv(dv_df)
@@ -5264,24 +5218,13 @@ class TxLogTable:
                          .drop("__zval"))
         else:
             compacted = snap.repartition(target_segments)
-        rel_new = self._write_segments(compacted)
-        rel_removed = [
-            os.path.relpath(os.path.normpath(p), os.path.normpath(self.path))
-            for p in files
-        ]
-        commit: dict = {"op": "OPTIMIZE", "ts": self._next_ts(),
-                        "filesRewritten": len(rel_removed),
-                        "filesAdded": len(rel_new)}
+        commit: dict = {}
         if zorder_by:
             commit["zorderBy"] = list(zorder_by)
         if where:
             commit["where"] = {c: str(v) for c, v in where.items()}
-        actions = (
-            [{"commit": commit}]
-            + [{"remove": {"path": p}} for p in rel_removed]
-            + self._add_actions(rel_new)
-        )
-        return self._commit_with_occ(actions, rel_removed, base_version)
+        return self._commit_rewrite("OPTIMIZE", base_version, files,
+                                    compacted, commit=commit)
 
     def copy_into(self, src_path: str, file_format: str = "parquet",
                   options: dict | None = None) -> tuple[int, int]:
@@ -5384,11 +5327,10 @@ class TxLogTable:
         # expectations gate the landing files like every ingest path —
         # the quality contract COPY INTO exists for (bulk front door)
         df, exp_commit = self._apply_expectations(df)
-        df, ident_actions, ident_cleanup = self._assign_identity(df)
-        self._validate_constraints(df)
-        rel = self._write_segments(df)
-        if ident_cleanup:
-            ident_cleanup()
+        with self._pinned() as pin:
+            df, ident_actions = self._assign_identity(df, pin)
+            self._validate_constraints(df)
+            rel = self._write_segments(df)
         actions = (
             [{"commit": {"op": "COPY INTO", "ts": self._next_ts(),
                          "source": src_abs,
@@ -5441,16 +5383,9 @@ class TxLogTable:
             return self.latest_version()
         abs_targets = [os.path.join(self.path, p) for p in targets]
         # DV-applied survivors; id-preserving under row tracking
-        clean = self._read_active_tracked(only=abs_targets)
-        rel_new = self._write_segments(clean)
-        actions = (
-            [{"commit": {"op": "REORG", "ts": self._next_ts(),
-                         "filesRewritten": len(targets),
-                         "filesAdded": len(rel_new)}}]
-            + [{"remove": {"path": p}} for p in targets]
-            + self._add_actions(rel_new)
-        )
-        return self._commit_with_occ(actions, targets, base_version)
+        return self._commit_rewrite(
+            "REORG", base_version, abs_targets,
+            self._read_active_tracked(only=abs_targets))
 
     # -- table properties (Delta TBLPROPERTIES) -----------------------------
 
@@ -5720,47 +5655,43 @@ class TxLogTable:
         # streaming folds); this fold evaluates it many times — dup
         # check, winner fold, touched-file probe, rewrite, CDF images.
         # Persist for the fold's duration; scale-safe (broadcast bound).
-        ch_cached = not changes.is_cached
-        if ch_cached:
-            changes = changes.persist()
-        ch_handle = changes
-        dup = (changes.groupBy(*keys, sequence_by).count()
-               .filter(F.col("count") > 1).limit(1).count())
-        if dup:
-            if ch_cached:
-                ch_handle.unpersist()
-            raise ValueError(
-                "apply_changes: duplicate (key, sequence) in the batch — "
-                "sequencing is ambiguous; deduplicate upstream")
-        # logical column names straight from the committed schema — a
-        # full read() plan (snapshot scan + DV anti-join) just for
-        # .columns is wasted work
-        _, schema_json = self._snapshot_files()
-        target_cols = [f.name for f in
-                       T.StructType.fromJson(json.loads(schema_json)).fields]
-        if ignore_null_updates:
-            # r12 (mirroring the SCD2 shape): resolve the inheritance
-            # as a PRE-step — seeded by one deterministic row per key,
-            # reset by deletes — so the standard fold below sees a
-            # fully-resolved batch and the expectation gate evaluates
-            # the RESOLVED rows (ADVICE r11: a NULL inherit slot that
-            # resolves to a passing value is not a violation; SCD1
-            # keeps identity inheritance — "keep the previous value"
-            # keeps the row's id on an in-place upsert)
-            changes = self._scd2_resolve_null_updates(
-                changes, keys, sequence_by, change_type_col,
-                list(target_cols), end_col=None, inherit_identity=True)
-            changes, exp_commit = self._apply_expectations(
-                changes, exempt=F.col(change_type_col) == "delete")
-            cols = changes.columns
-        # The winner fold (groupBy + max_by) is re-evaluated by every
-        # consumer below (key stats, touched probe, rewrite union, CDF
-        # delete/post/insert splits); winners ≤ batch keys, so persist.
-        winners = (changes.groupBy(*keys)
-                   .agg(F.max_by(F.struct(*[F.col(c) for c in cols]),
-                                 F.col(sequence_by)).alias("__w"))
-                   .select("__w.*")).persist()
-        try:
+        with self._pinned() as pin:
+            changes = pin(changes)
+            dup = (changes.groupBy(*keys, sequence_by).count()
+                   .filter(F.col("count") > 1).limit(1).count())
+            if dup:
+                raise ValueError(
+                    "apply_changes: duplicate (key, sequence) in the batch "
+                    "— sequencing is ambiguous; deduplicate upstream")
+            # logical column names straight from the committed schema — a
+            # full read() plan (snapshot scan + DV anti-join) just for
+            # .columns is wasted work
+            _, schema_json = self._snapshot_files()
+            target_cols = [
+                f.name for f in
+                T.StructType.fromJson(json.loads(schema_json)).fields]
+            if ignore_null_updates:
+                # r12 (mirroring the SCD2 shape): resolve the inheritance
+                # as a PRE-step — seeded by one deterministic row per key,
+                # reset by deletes — so the standard fold below sees a
+                # fully-resolved batch and the expectation gate evaluates
+                # the RESOLVED rows (ADVICE r11: a NULL inherit slot that
+                # resolves to a passing value is not a violation; SCD1
+                # keeps identity inheritance — "keep the previous value"
+                # keeps the row's id on an in-place upsert)
+                changes = self._scd2_resolve_null_updates(
+                    changes, keys, sequence_by, change_type_col,
+                    list(target_cols), end_col=None, inherit_identity=True)
+                changes, exp_commit = self._apply_expectations(
+                    changes, exempt=F.col(change_type_col) == "delete")
+                cols = changes.columns
+            # The winner fold (groupBy + max_by) is re-evaluated by every
+            # consumer below (key stats, touched probe, rewrite union, CDF
+            # delete/post/insert splits); winners ≤ batch keys, so persist.
+            winners = pin(changes.groupBy(*keys)
+                          .agg(F.max_by(F.struct(*[F.col(c) for c in cols]),
+                                        F.col(sequence_by)).alias("__w"))
+                          .select("__w.*"))
             wkeys = winners.select(*keys).distinct()
             aggs = []
             for k in keys:
@@ -5774,12 +5705,11 @@ class TxLogTable:
             # read); only files whose stats could hold a winner key are
             # probed (data skipping — the plain-equality join rejects
             # NULL keys, so the non-NULL bounds prune is sound)
-            base = self._read_active(
-                with_file=True, only=self._key_probe_candidates(ranges))
-            touched = sorted(
-                r["_file"] for r in
-                base.join(F.broadcast(wkeys), keys, "left_semi")
-                .select("_file").distinct().collect())
+            touched = self._touched_files(
+                self._read_active(
+                    with_file=True,
+                    only=self._key_probe_candidates(ranges))
+                .join(F.broadcast(wkeys), keys, "left_semi"))
             # with ignore_null_updates the batch was already RESOLVED
             # above (pre-step), so one fold serves both modes: the winner
             # event decides delete-vs-upsert, its payload is the
@@ -5787,87 +5717,41 @@ class TxLogTable:
             ups = (winners.filter(F.col(change_type_col) != "delete")
                    .select(*target_cols))
             ups = self._apply_generated(ups)
-            ups, ident_actions, ident_cleanup = self._assign_identity(ups)
+            ups, ident_actions = self._assign_identity(ups, pin)
             self._validate_constraints(ups)
-            if touched:
-                seg = self._read_active_tracked(only=touched)
-                keep_base = seg.join(F.broadcast(wkeys), keys, "left_anti")
-                write_ups = ups
-                if self._row_tracking_enabled():
-                    # upserted rows of EXISTING keys keep their row ids;
-                    # inserted keys stay NULL __rid → fresh base+position
-                    idmap = (seg.join(F.broadcast(wkeys), keys,
-                                      "left_semi")
-                             .select(*keys, "__rid"))
-                    write_ups = ups.join(F.broadcast(idmap), keys, "left")
-                merged = keep_base.unionByName(write_ups,
-                                               allowMissingColumns=True)
-            else:
-                merged = ups
-            rel_new = self._write_segments(merged)
-            cdf_actions: list[dict] = []
-            if self.enable_cdf:
+
+            def cdf() -> DataFrame:
+                if not touched:
+                    return ups.withColumn("_change_type", F.lit("insert"))
                 dkeys = (winners.filter(F.col(change_type_col) == "delete")
                          .select(*keys).distinct())
                 pre = (self._read_active(only=touched)
-                       .join(F.broadcast(wkeys), keys, "left_semi")
-                       if touched else None)
-                pieces = []
-                if pre is not None:
-                    pieces.append(
-                        pre.join(F.broadcast(dkeys), keys, "left_semi")
-                        .withColumn("_change_type", F.lit("delete")))
-                    matched = pre.join(F.broadcast(dkeys), keys,
-                                       "left_anti")
-                    pieces.append(matched.withColumn(
-                        "_change_type", F.lit("update_preimage")))
-                    mkeys = matched.select(*keys).distinct()
-                    pieces.append(
+                       .join(F.broadcast(wkeys), keys, "left_semi"))
+                matched = pre.join(F.broadcast(dkeys), keys, "left_anti")
+                mkeys = matched.select(*keys).distinct()
+                return (
+                    pre.join(F.broadcast(dkeys), keys, "left_semi")
+                    .withColumn("_change_type", F.lit("delete"))
+                    .unionByName(matched.withColumn(
+                        "_change_type", F.lit("update_preimage")),
+                        allowMissingColumns=True)
+                    .unionByName(
                         ups.join(F.broadcast(mkeys), keys, "left_semi")
                         .withColumn("_change_type",
-                                    F.lit("update_postimage")))
-                    pieces.append(
+                                    F.lit("update_postimage")),
+                        allowMissingColumns=True)
+                    .unionByName(
                         ups.join(F.broadcast(mkeys), keys, "left_anti")
-                        .withColumn("_change_type", F.lit("insert")))
-                else:
-                    pieces.append(ups.withColumn("_change_type",
-                                                 F.lit("insert")))
-                ch = pieces[0]
-                for p in pieces[1:]:
-                    ch = ch.unionByName(p, allowMissingColumns=True)
-                cdf_actions = [
-                    {"cdf": {"path": self._write_change_data(ch)}}]
-            rel_removed = [
-                os.path.relpath(os.path.normpath(p),
-                                os.path.normpath(self.path))
-                for p in touched
-            ]
-            if ident_cleanup:
-                ident_cleanup()
-            txn_actions = ([] if txn_app_id is None else
-                           [{"txn": {"appId": txn_app_id,
-                                     "version": int(txn_version)}}])
-            actions = (
-                [{"commit": {"op": "APPLY CHANGES", "ts": self._next_ts(),
-                             "filesRewritten": len(rel_removed),
-                             "filesAdded": len(rel_new),
-                             **exp_commit,
-                             **self._key_range_commit(key_range)}}]
-                + txn_actions
-                + ident_actions
-                + self._schema_evolution_action(ups)
-                + [{"remove": {"path": p}} for p in rel_removed]
-                + self._add_actions(rel_new)
-                + cdf_actions
-            )
-            return self._commit_with_occ(
-                actions, rel_removed, base_version, key_range=key_range,
-                txn=None if txn_app_id is None
-                else (txn_app_id, int(txn_version)))
-        finally:
-            winners.unpersist()
-            if ch_cached:
-                ch_handle.unpersist()
+                        .withColumn("_change_type", F.lit("insert")),
+                        allowMissingColumns=True))
+
+            return self._commit_rewrite(
+                "APPLY CHANGES", base_version, touched,
+                self._replace_keys(touched, keys, wkeys, ups), cdf,
+                commit=exp_commit, key_range=key_range,
+                txn=(None if txn_app_id is None
+                     else (txn_app_id, txn_version)),
+                actions=ident_actions + self._schema_evolution_action(ups))
 
     def _scd2_resolve_null_updates(self, changes: DataFrame,
                                    keys: list[str], sequence_by: str,
@@ -5973,18 +5857,12 @@ class TxLogTable:
         and the fold evaluates it many times (dup check, frontier guard,
         touched probe, history rewrite, tombstones, CDF images).
         Persist for the fold's duration so the transport runs once."""
-        cached = not changes.is_cached
-        if cached:
-            changes = changes.persist()
-        try:
+        with self._pinned() as pin:
             return self._apply_changes_scd2_body(
-                changes, key, sequence_by, change_type_col, start_col,
+                pin(changes), key, sequence_by, change_type_col, start_col,
                 end_col, txn_app_id, txn_version, allow_backfill,
                 apply_as_deletes, track_history_except_columns,
                 ignore_null_updates)
-        finally:
-            if cached:
-                changes.unpersist()
 
     def _apply_changes_scd2_body(self, changes: DataFrame, key,
                                  sequence_by: str,
@@ -6286,11 +6164,9 @@ class TxLogTable:
                 "frontier or use allow_backfill")
         # only segments holding an OPEN row of a batch key are touched —
         # closed history never changes.
-        open_hits = (base.filter(F.col(end_col).isNull())
-                     .join(F.broadcast(firsts.select(*keys)), keys,
-                           "left_semi"))
-        touched = sorted(r["_file"] for r in
-                         open_hits.select("_file").distinct().collect())
+        touched = self._touched_files(
+            base.filter(F.col(end_col).isNull())
+            .join(F.broadcast(firsts.select(*keys)), keys, "left_semi"))
         # TOMBSTONES: a delete that closes NOTHING (its predecessor in
         # the key's merged timeline is another delete, or it is the
         # key's first event and the key has no open row) must still
@@ -6321,81 +6197,63 @@ class TxLogTable:
                                   seq.alias(start_col),
                                   seq.alias(end_col)))
             new_rows = ups.unionByName(tombstones)
-        new_rows, ident_actions, ident_cleanup = \
-            self._assign_identity(new_rows)
-        closed = None
-        if touched:
-            seg = self._read_active_tracked(only=touched)
-            # carry: all closed rows, plus open rows of NON-batch keys
-            # (an all-column anti-join would mis-carry NULL payloads —
-            # NULL never equals NULL in a join — so scope by end+key).
-            keep = (seg.filter(F.col(end_col).isNotNull())
-                    .unionByName(
-                        seg.filter(F.col(end_col).isNull())
-                        .join(F.broadcast(firsts.select(*keys)), keys,
-                              "left_anti")))
-            closed_cols = target_cols + (
-                ["__rid"] if "__rid" in seg.columns else [])
-            closed = (seg.filter(F.col(end_col).isNull())
-                      .join(F.broadcast(firsts), keys)
-                      .withColumn(end_col, F.col("__first"))
-                      .select(*closed_cols))
-            merged = (keep.unionByName(closed)
-                      .unionByName(new_rows, allowMissingColumns=True))
-        else:
-            merged = new_rows
-        merged = self._apply_generated(merged)
-        self._validate_constraints(merged)
-        rel_new = self._write_segments(merged)
-        cdf_actions: list[dict] = []
-        if self.enable_cdf:
-            # zero-width tombstones are delete traces, not row versions
-            # — they never surface in the change feed (a downstream MV
-            # or CDC consumer would otherwise count phantom inserts)
-            visible = new_rows.filter(
-                F.col(end_col).isNull()
-                | (F.col(start_col) != F.col(end_col)))
-            pieces = [visible.withColumn("_change_type", F.lit("insert"))]
+        with self._pinned() as pin:
+            new_rows, ident_actions = self._assign_identity(new_rows, pin)
+            closed = None
             if touched:
-                pre = (self._read_active(only=touched)
-                       .filter(F.col(end_col).isNull())
-                       .join(F.broadcast(firsts.select(*keys)), keys,
-                             "left_semi"))
-                pieces.append(pre.withColumn(
-                    "_change_type", F.lit("update_preimage")))
-                pieces.append(self._drop_rid(closed).withColumn(
-                    "_change_type", F.lit("update_postimage")))
-            ch = pieces[0]
-            for p in pieces[1:]:
-                ch = ch.unionByName(p, allowMissingColumns=True)
-            cdf_actions = [{"cdf": {"path": self._write_change_data(ch)}}]
-        rel_removed = [
-            os.path.relpath(os.path.normpath(p), os.path.normpath(self.path))
-            for p in touched
-        ]
-        if ident_cleanup:
-            ident_cleanup()
-        txn_actions = ([] if txn_app_id is None else
-                       [{"txn": {"appId": txn_app_id,
-                                 "version": int(txn_version)}}])
-        actions = (
-            [{"commit": {"op": "APPLY CHANGES SCD2",
-                         "ts": self._next_ts(),
-                         "filesRewritten": len(rel_removed),
-                         "filesAdded": len(rel_new),
-                         **exp_commit,
-                         **self._key_range_commit(key_range)}}]
-            + self._scd2_mark_actions(start_col, end_col, schema_json)
-            + txn_actions
-            + ident_actions
-            + [{"remove": {"path": p}} for p in rel_removed]
-            + self._add_actions(rel_new)
-            + cdf_actions
-        )
-        return self._commit_with_occ(
-            actions, rel_removed, base_version, key_range=key_range,
-            txn=None if txn_app_id is None
-            else (txn_app_id, int(txn_version)))
+                seg = self._read_active_tracked(only=touched)
+                # carry: all closed rows, plus open rows of NON-batch keys
+                # (an all-column anti-join would mis-carry NULL payloads —
+                # NULL never equals NULL in a join — so scope by end+key).
+                keep = (seg.filter(F.col(end_col).isNotNull())
+                        .unionByName(
+                            seg.filter(F.col(end_col).isNull())
+                            .join(F.broadcast(firsts.select(*keys)), keys,
+                                  "left_anti")))
+                closed_cols = target_cols + (
+                    ["__rid"] if "__rid" in seg.columns else [])
+                closed = (seg.filter(F.col(end_col).isNull())
+                          .join(F.broadcast(firsts), keys)
+                          .withColumn(end_col, F.col("__first"))
+                          .select(*closed_cols))
+                merged = (keep.unionByName(closed)
+                          .unionByName(new_rows, allowMissingColumns=True))
+            else:
+                merged = new_rows
+            merged = self._apply_generated(merged)
+            self._validate_constraints(merged)
+
+            def cdf() -> DataFrame:
+                # zero-width tombstones are delete traces, not row
+                # versions — they never surface in the change feed (a
+                # downstream MV or CDC consumer would otherwise count
+                # phantom inserts)
+                ch = (new_rows.filter(F.col(end_col).isNull()
+                                      | (F.col(start_col) != F.col(end_col)))
+                      .withColumn("_change_type", F.lit("insert")))
+                if touched:
+                    pre = (self._read_active(only=touched)
+                           .filter(F.col(end_col).isNull())
+                           .join(F.broadcast(firsts.select(*keys)), keys,
+                                 "left_semi"))
+                    ch = (ch.unionByName(
+                              pre.withColumn("_change_type",
+                                             F.lit("update_preimage")),
+                              allowMissingColumns=True)
+                          .unionByName(
+                              self._drop_rid(closed).withColumn(
+                                  "_change_type", F.lit("update_postimage")),
+                              allowMissingColumns=True))
+                return ch
+
+            return self._commit_rewrite(
+                "APPLY CHANGES SCD2", base_version, touched, merged, cdf,
+                commit=exp_commit, key_range=key_range,
+                txn=(None if txn_app_id is None
+                     else (txn_app_id, txn_version)),
+                actions=self._scd2_mark_actions(start_col, end_col,
+                                                schema_json)
+                + ident_actions)
 
     def _scd2_splice(self, changes: DataFrame, keys: list[str], seq,
                      change_type_col: str, start_col: str, end_col: str,
@@ -6464,10 +6322,8 @@ class TxLogTable:
         # splice (closed rows reconstruct so late events interleave).
         hits = (base.filter(F.col(end_col).isNull())
                 if scope_open_only else base)
-        touched = sorted(
-            r["_file"] for r in
-            hits.join(F.broadcast(kset), keys, "left_semi")
-            .select("_file").distinct().collect())
+        touched = self._touched_files(
+            hits.join(F.broadcast(kset), keys, "left_semi"))
         existing = carry = None
         rid: list[str] = []
         if touched:
@@ -6536,9 +6392,8 @@ class TxLogTable:
         # (affected chains + batch) and feeds several passes (dup check,
         # re-fold, rewrite, CDF diff) — pin it, and pin the re-fold input
         # again below if resolution/collapse rebuilt it
-        events = events.persist()
-        _pins = [events]
-        try:
+        with self._pinned() as pin:
+            events = pin(events)
             dup = (events.groupBy(*keys, "__seq").count()
                    .filter(F.col("count") > 1).limit(1).count())
             if dup:
@@ -6651,9 +6506,7 @@ class TxLogTable:
                                     if c in vcols else F.col(c)
                                     for c in nonkey],
                                   "__seq", "__del", *rid))
-            if events is not _pins[0]:
-                events = events.persist()
-                _pins.append(events)
+            events = pin(events)
             ev = (events
                   .withColumn("__nxt", F.lead("__seq").over(w))
                   .withColumn("__pdel", F.lag("__del").over(w)))
@@ -6680,88 +6533,61 @@ class TxLogTable:
             # BY DEFAULT identity: NULL slots (spliced batch rows) are
             # engine-assigned BEFORE the carry union so the CDF images below
             # see the stamped values; carried/re-folded rows keep theirs
-            refolded, ident_actions, ident_cleanup = \
-                self._assign_identity(refolded)
+            refolded, ident_actions = self._assign_identity(refolded, pin)
             merged = (carry.unionByName(refolded, allowMissingColumns=True)
                       if carry is not None else refolded)
             merged = self._apply_generated(merged)
             self._validate_constraints(merged)
-            rel_new = self._write_segments(merged)
-            if ident_cleanup:
-                ident_cleanup()
-            cdf_actions: list[dict] = []
-            if self.enable_cdf:
+
+            def cdf() -> DataFrame:
                 new_plain = refolded.select(*target_cols)
-                if existing is not None:
-                    old_plain = existing.select(*target_cols)
-                    o = old_plain.select(
-                        *[F.col(c).alias(f"o_{c}") for c in target_cols])
-                    n = new_plain.select(
-                        *[F.col(c).alias(f"n_{c}") for c in target_cols])
-                    jc = F.col(f"o_{start_col}").eqNullSafe(
-                        F.col(f"n_{start_col}"))
-                    for k in keys:
-                        jc = jc & F.col(f"o_{k}").eqNullSafe(F.col(f"n_{k}"))
-                    j = o.join(n, jc, "full_outer")
-                    same = F.lit(True)
-                    for c in target_cols:
-                        same = same & F.col(f"o_{c}").eqNullSafe(
-                            F.col(f"n_{c}"))
-                    changed = j.filter(
-                        F.col(f"o_{start_col}").isNotNull()
-                        & F.col(f"n_{start_col}").isNotNull()
-                        & ~same)
-                    pre = changed.select(
-                        *[F.col(f"o_{c}").alias(c) for c in target_cols]
-                    ).withColumn("_change_type", F.lit("update_preimage"))
-                    post = changed.select(
-                        *[F.col(f"n_{c}").alias(c) for c in target_cols]
-                    ).withColumn("_change_type", F.lit("update_postimage"))
-                    # re-emitted tombstones stay out of the feed (delete
-                    # traces, not row versions — same as the main fold)
-                    ins = (j.filter(F.col(f"o_{start_col}").isNull())
-                           .select(*[F.col(f"n_{c}").alias(c)
-                                     for c in target_cols])
-                           .filter(F.col(end_col).isNull()
-                                   | (F.col(start_col) != F.col(end_col)))
-                           .withColumn("_change_type", F.lit("insert")))
-                    ch = pre.unionByName(post).unionByName(ins)
-                else:
-                    ch = (new_plain.filter(
-                              F.col(end_col).isNull()
-                              | (F.col(start_col) != F.col(end_col)))
-                          .withColumn("_change_type", F.lit("insert")))
-                cdf_actions = [{"cdf": {"path": self._write_change_data(ch)}}]
-            rel_removed = [
-                os.path.relpath(os.path.normpath(p), os.path.normpath(self.path))
-                for p in touched
-            ]
-            txn_actions = ([] if txn_app_id is None else
-                           [{"txn": {"appId": txn_app_id,
-                                     "version": int(txn_version)}}])
-            actions = (
-                [{"commit": {"op": op_name,
-                             "ts": self._next_ts(),
-                             "filesRewritten": len(rel_removed),
-                             "filesAdded": len(rel_new),
-                             **(extra_commit or {}),
-                             **self._key_range_commit(key_range)}}]
-                + self._scd2_mark_actions(start_col, end_col, schema_json)
-                + txn_actions
-                + ident_actions
-                + [{"remove": {"path": p}} for p in rel_removed]
-                + self._add_actions(rel_new)
-                + cdf_actions
-            )
-            return self._commit_with_occ(
-                actions, rel_removed, base_version, key_range=key_range,
-                txn=None if txn_app_id is None
-                else (txn_app_id, int(txn_version)))
-        finally:
-            # unpersist on EVERY exit — the dup-check raise and any
-            # refused validation must not leave the timeline pinned
-            for p in _pins:
-                p.unpersist()
+                if existing is None:
+                    return (new_plain.filter(
+                                F.col(end_col).isNull()
+                                | (F.col(start_col) != F.col(end_col)))
+                            .withColumn("_change_type", F.lit("insert")))
+                old_plain = existing.select(*target_cols)
+                o = old_plain.select(
+                    *[F.col(c).alias(f"o_{c}") for c in target_cols])
+                n = new_plain.select(
+                    *[F.col(c).alias(f"n_{c}") for c in target_cols])
+                jc = F.col(f"o_{start_col}").eqNullSafe(
+                    F.col(f"n_{start_col}"))
+                for k in keys:
+                    jc = jc & F.col(f"o_{k}").eqNullSafe(F.col(f"n_{k}"))
+                j = o.join(n, jc, "full_outer")
+                same = F.lit(True)
+                for c in target_cols:
+                    same = same & F.col(f"o_{c}").eqNullSafe(
+                        F.col(f"n_{c}"))
+                changed = j.filter(
+                    F.col(f"o_{start_col}").isNotNull()
+                    & F.col(f"n_{start_col}").isNotNull()
+                    & ~same)
+                pre = changed.select(
+                    *[F.col(f"o_{c}").alias(c) for c in target_cols]
+                ).withColumn("_change_type", F.lit("update_preimage"))
+                post = changed.select(
+                    *[F.col(f"n_{c}").alias(c) for c in target_cols]
+                ).withColumn("_change_type", F.lit("update_postimage"))
+                # re-emitted tombstones stay out of the feed (delete
+                # traces, not row versions — same as the main fold)
+                ins = (j.filter(F.col(f"o_{start_col}").isNull())
+                       .select(*[F.col(f"n_{c}").alias(c)
+                                 for c in target_cols])
+                       .filter(F.col(end_col).isNull()
+                               | (F.col(start_col) != F.col(end_col)))
+                       .withColumn("_change_type", F.lit("insert")))
+                return pre.unionByName(post).unionByName(ins)
+
+            return self._commit_rewrite(
+                op_name, base_version, touched, merged, cdf,
+                commit=extra_commit, key_range=key_range,
+                txn=(None if txn_app_id is None
+                     else (txn_app_id, txn_version)),
+                actions=self._scd2_mark_actions(start_col, end_col,
+                                                schema_json)
+                + ident_actions)
 
     def apply_changes_from_snapshot(self, snapshot: DataFrame, key,
                                     snapshot_version,
@@ -6901,8 +6727,8 @@ class TxLogTable:
         # the folds reference the batch several times (dup check, key
         # stats, the window fold); pin the diff so each pass doesn't
         # re-run the full-outer join
-        events = events.persist()
-        try:
+        with self._pinned() as pin:
+            events = pin(events)
             if scd_type == 2:
                 return self.apply_changes_scd2(
                     events, key=key, sequence_by="__snapshot_seq",
@@ -6913,8 +6739,6 @@ class TxLogTable:
             return self.apply_changes(
                 events, key=key, sequence_by="__snapshot_seq",
                 txn_app_id=app, txn_version=ver)
-        finally:
-            events.unpersist()
 
     def cdc_sink(self, app_id: str, key, sequence_by: str,
                  scd_type: int = 1, apply_as_deletes: str | None = None,

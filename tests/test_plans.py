@@ -224,35 +224,6 @@ def test_interval_join_is_equi_not_nested_loop(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_bloom_filter_prunes_application_side(spark, sf_dir):
-    """Inside bloom_scope, a selective fact-fact SMJ gets a might_contain
-    predicate pushed into the large side's scan, and results match the
-    unfiltered join exactly; outside the scope, session confs revert."""
-    from distributed_database_for_sql_spark.operators.bloom_join import bloom_scope
-    from distributed_database_for_sql_spark.plans.explain import physical_plan
-
-    def build():
-        # fresh DataFrame per use: AQE pins the executed plan on the
-        # object, so a pre-scope collect would mask the injection
-        li = load_table(spark, sf_dir, "lineitem")
-        orders = load_table(spark, sf_dir, "orders").filter(
-            F.col("o_totalprice") > 400000)
-        return (li.join(orders, li.l_orderkey == orders.o_orderkey)
-                .groupBy("o_orderpriority").agg(F.count("*").alias("n")))
-
-    want = {(r.o_orderpriority, r.n) for r in build().collect()}
-
-    before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    with bloom_scope(spark):
-        fresh = build()
-        plan = physical_plan(fresh)
-        assert "might_contain" in plan
-        assert "bloom_filter_agg" in plan
-        got = {(r.o_orderpriority, r.n) for r in fresh.collect()}
-    assert got == want
-    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before
-
-
 def test_group_by_agg_is_partial_then_final(spark):
     """Map-side combine: two HashAggregate phases around one exchange."""
     from distributed_database_for_sql_spark.plans.explain import physical_plan

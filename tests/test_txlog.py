@@ -7988,3 +7988,75 @@ def test_uniform_tag_survives_concurrent_refresh_race(spark, tdir):
         uniform._rewrite_metadata = real
     with pytest.raises(KeyError):
         uniform.resolve_ref(t.path, "pinned")
+
+
+# -- the shared copy-on-write commit tail ------------------------------------
+
+def test_refused_identity_writes_release_their_cache(spark, tdir):
+    """A write refused AFTER identity assignment (here a CHECK
+    violation) must not leave the identity write set cached: append,
+    MERGE and APPLY CHANGES each pin it for the statement only."""
+    t = TxLogTable.create(
+        spark, tdir,
+        spark.createDataFrame([("a", 10)], "grp string, v int"),
+        identity_columns={"id": {"start": 1, "always": False}})
+    t.add_constraint("v_pos", "v > 0")
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = cached().size()
+    bad = spark.createDataFrame([(None, "b", -1)],
+                                "id long, grp string, v int")
+    with pytest.raises(ValueError, match="v_pos"):
+        t.append(bad)
+    with pytest.raises(ValueError, match="v_pos"):
+        t.merge_upsert(bad, "grp")
+    with pytest.raises(ValueError, match="v_pos"):
+        t.apply_changes(spark.createDataFrame(
+            [(None, "b", -1, 1, "insert")],
+            "id long, grp string, v int, seq int, _change_type string"),
+            key="grp", sequence_by="seq")
+    assert cached().size() == before
+    assert t.latest_version() == 1  # create + ADD CONSTRAINT only
+
+
+def test_rewrite_commits_share_one_shape(spark, tdir):
+    """Every file-rewriting statement commits through one tail: the
+    commit record counts its own remove/add actions, and every
+    remove/add path is table-relative."""
+    t = TxLogTable.create(spark, tdir, _scd2_df(spark, [
+        (1, 10, 0, None), (2, 20, 0, None), (3, 30, 0, None),
+        (4, 40, 0, None)]), enable_cdf=True)
+    versions = [
+        t.delete_where(F.col("k") == 4),
+        t.update_where({"v": "v + 1"}, F.col("k") == 1),
+        t.merge_upsert(_scd2_df(spark, [(2, 21, 0, None),
+                                        (5, 50, 0, None)]), "k"),
+        t.merge_full(spark.createDataFrame([(3, 31)], "k int, v int"), "k",
+                     when_matched=[{"action": "update",
+                                    "set": {"v": "s.v"}}]),
+        t.apply_changes(spark.createDataFrame(
+            [(5, 51, 0, None, 1, "upsert")],
+            "k int, v int, __START_AT int, __END_AT int, seq int, "
+            "_change_type string"), key="k", sequence_by="seq"),
+        t.apply_changes_scd2(_scd2_changes(
+            spark, [(1, 12, 1, "update_postimage")]),
+            key="k", sequence_by="seq"),
+        t.optimize_compact(),
+    ]
+    t.delete_where(F.col("k") == 3, use_dv=True)
+    versions.append(t.reorg_purge())
+    ops = []
+    for v in versions:
+        actions = t._read_commit(v)
+        commit = next(a["commit"] for a in actions if "commit" in a)
+        ops.append(commit["op"])
+        paths = {kind: [a[kind]["path"] for a in actions if kind in a]
+                 for kind in ("remove", "add")}
+        assert commit["filesRewritten"] == len(paths["remove"]) >= 1, commit
+        assert commit["filesAdded"] == len(paths["add"]), commit
+        for p in paths["remove"] + paths["add"]:
+            assert not os.path.isabs(p) and not p.startswith(".."), p
+    assert ops == ["DELETE", "UPDATE", "MERGE", "MERGE", "APPLY CHANGES",
+                   "APPLY CHANGES SCD2", "OPTIMIZE", "REORG"]
+    assert sorted((r["k"], r["v"], r["__END_AT"])
+                  for r in t.read().collect()) == [
+        (1, 11, 1), (1, 12, None), (2, 21, None), (5, 51, None)]
