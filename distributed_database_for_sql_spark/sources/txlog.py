@@ -609,7 +609,7 @@ class TxLogTable:
         #: no extra storage — their change rows ARE the added segments.
         self.enable_cdf = enable_cdf
         #: multi-statement transaction state (begin_transaction): a list
-        #: of staged {actions, removed, key_range} per operation, served
+        #: of staged {actions, removed, key_ranges} per operation, served
         #: back as virtual log versions so reads through this handle see
         #: the transaction's own effects before commit.
         self._staged: list[dict] | None = None
@@ -775,7 +775,7 @@ class TxLogTable:
 
     def _commit_with_occ(self, actions: list[dict], removed: list[str],
                          base_version: int,
-                         key_range: dict | list[dict] | None = None,
+                         key_ranges: list[dict] | None = None,
                          txn: tuple[str, int] | None = None,
                          domains: list[str] | None = None,
                          dv_guards: list[dict] | None = None) -> int:
@@ -801,7 +801,7 @@ class TxLogTable:
             # begin snapshot
             self._staged.append({"actions": actions,
                                  "removed": list(removed),
-                                 "key_range": key_range,
+                                 "key_ranges": list(key_ranges or []),
                                  "domains": list(domains or []),
                                  "dv_guards": list(dv_guards or [])})
             return self.latest_version()
@@ -870,8 +870,7 @@ class TxLogTable:
                     # contended files), never O(table).
                     self._check_dv_row_conflicts(
                         dv_guards, base_version, v)
-                ours = ([key_range] if isinstance(key_range, dict)
-                        else list(key_range or []))
+                ours = list(key_ranges or [])
                 if ours:
                     for i in range(base_version + 1, v):
                         for action in self._read_commit(i):
@@ -908,7 +907,7 @@ class TxLogTable:
     def _commit_rewrite(self, op: str, base_version: int,
                         removed: list[str], rows: DataFrame,
                         changes=None, *, commit: dict | None = None,
-                        actions=(), key_range=None,
+                        actions=(), key_ranges: list[dict] | None = None,
                         txn: tuple[str, int] | None = None) -> int:
         """The shared tail of every copy-on-write statement: write
         ``rows`` as new segments, write the change rows when the table
@@ -919,7 +918,7 @@ class TxLogTable:
         ``changes`` is a zero-argument callable returning the change
         rows, so a table without CDF never plans them.  The commit
         record always carries ``filesRewritten``/``filesAdded`` plus the
-        key range (when given) and the op's own ``commit`` fields.
+        key ranges (when given) and the op's own ``commit`` fields.
         Action order: commit, ``txn`` (when given), the op's ``actions``
         (identity, schema evolution, SCD2 marks), removes, adds, cdf."""
         rel_new = self._write_segments(rows)
@@ -929,8 +928,8 @@ class TxLogTable:
         head = {"op": op, "ts": self._next_ts(),
                 "filesRewritten": len(rel_removed),
                 "filesAdded": len(rel_new)}
-        if key_range is not None:
-            head.update(self._key_range_commit(key_range))
+        if key_ranges:
+            head.update(self._key_range_commit(key_ranges))
         head.update(commit or {})
         txn_action = ([] if txn is None else
                       [{"txn": {"appId": txn[0], "version": int(txn[1])}}])
@@ -938,7 +937,7 @@ class TxLogTable:
             [{"commit": head}] + txn_action + list(actions)
             + [{"remove": {"path": p}} for p in rel_removed]
             + self._add_actions(rel_new) + cdf,
-            rel_removed, base_version, key_range=key_range, txn=txn)
+            rel_removed, base_version, key_ranges=key_ranges, txn=txn)
 
     # -- checkpointing (Delta's _last_checkpoint pattern) ---------------------
 
@@ -3233,7 +3232,7 @@ class TxLogTable:
                     self.txn_version_for(txn_app_id) >= txn_version:
                 return self.latest_version()
             self._staged.append({"actions": actions, "removed": [],
-                                 "key_range": None})
+                                 "key_ranges": []})
             return self.latest_version()
         self._assert_writable()
         rid_fresh = (self._fresh_add_paths(actions)
@@ -3324,8 +3323,7 @@ class TxLogTable:
                 else:
                     tail.append(a)
             removed.extend(s["removed"])
-            r = s.get("key_range")
-            if r is not None:
+            for r in s["key_ranges"]:
                 col = r["column"]
                 have = ranges.get(col)
                 if have is None:
@@ -4192,14 +4190,14 @@ class TxLogTable:
         return kept
 
     @staticmethod
-    def _key_range_commit(key_range) -> dict:
+    def _key_range_commit(key_ranges: list[dict]) -> dict:
         """Commit-record fragment for the OCC key range(s): single-key
         commits keep the original ``keyRange`` field; composite keys
         record ``keyRanges`` (one per column — conflict detection is
         per-column and conservative: overlap on any shared column reads
         as a conflict)."""
-        return ({"keyRange": key_range} if isinstance(key_range, dict)
-                else {"keyRanges": key_range})
+        return ({"keyRange": key_ranges[0]} if len(key_ranges) == 1
+                else {"keyRanges": key_ranges})
 
     @contextlib.contextmanager
     def _pinned(self):
@@ -4321,7 +4319,6 @@ class TxLogTable:
         with self._pinned() as pin:
             updates = pin(updates)
             ranges, _ = self._key_range_stats(updates, keys, "MERGE")
-            key_range = ranges[0] if len(ranges) == 1 else ranges
             # CHECK constraints gate the incoming rows only — carried-over
             # segment rows already passed at their own write time.
             updates = self._apply_generated(updates)
@@ -4367,7 +4364,7 @@ class TxLogTable:
             return self._commit_rewrite(
                 "MERGE", base_version, touched,
                 self._replace_keys(touched, keys, upd_keys, updates),
-                changes, key_range=key_range,
+                changes, key_ranges=ranges,
                 actions=ident_actions
                 + self._schema_evolution_action(updates))
 
@@ -4500,7 +4497,6 @@ class TxLogTable:
             source = pin(source)
             ranges, had_null_keys = self._key_range_stats(
                 source, keys, "MERGE")
-            key_range = ranges[0] if len(ranges) == 1 else ranges
 
             def clause_cond(cl) -> "F.Column":
                 c = cl.get("condition")
@@ -4740,7 +4736,7 @@ class TxLogTable:
 
             return self._commit_rewrite(
                 "MERGE", base_version, touched, merged, changes,
-                key_range=key_range,
+                key_ranges=ranges,
                 commit={"clauses": {
                     "matched": len(when_matched),
                     "notMatched": len(when_not_matched),
@@ -5671,17 +5667,17 @@ class TxLogTable:
                 f.name for f in
                 T.StructType.fromJson(json.loads(schema_json)).fields]
             if ignore_null_updates:
-                # r12 (mirroring the SCD2 shape): resolve the inheritance
-                # as a PRE-step — seeded by one deterministic row per key,
+                # r12: resolve the inheritance as a PRE-step — seeded by
+                # one deterministic row per key,
                 # reset by deletes — so the standard fold below sees a
                 # fully-resolved batch and the expectation gate evaluates
                 # the RESOLVED rows (ADVICE r11: a NULL inherit slot that
                 # resolves to a passing value is not a violation; SCD1
                 # keeps identity inheritance — "keep the previous value"
                 # keeps the row's id on an in-place upsert)
-                changes = self._scd2_resolve_null_updates(
+                changes = self._resolve_null_updates(
                     changes, keys, sequence_by, change_type_col,
-                    list(target_cols), end_col=None, inherit_identity=True)
+                    target_cols)
                 changes, exp_commit = self._apply_expectations(
                     changes, exempt=F.col(change_type_col) == "delete")
                 cols = changes.columns
@@ -5700,7 +5696,6 @@ class TxLogTable:
             stats = wkeys.agg(*aggs).collect()[0]
             ranges = [{"column": k, "min": _json_key(stats[f"mn_{k}"]),
                        "max": _json_key(stats[f"mx_{k}"])} for k in keys]
-            key_range = ranges[0] if len(ranges) == 1 else ranges
             # exactly the segments holding any winner key (DV-applied
             # read); only files whose stats could hold a winner key are
             # probed (data skipping — the plain-equality join rejects
@@ -5748,77 +5743,51 @@ class TxLogTable:
             return self._commit_rewrite(
                 "APPLY CHANGES", base_version, touched,
                 self._replace_keys(touched, keys, wkeys, ups), cdf,
-                commit=exp_commit, key_range=key_range,
+                commit=exp_commit, key_ranges=ranges,
                 txn=(None if txn_app_id is None
                      else (txn_app_id, txn_version)),
                 actions=ident_actions + self._schema_evolution_action(ups))
 
-    def _scd2_resolve_null_updates(self, changes: DataFrame,
-                                   keys: list[str], sequence_by: str,
-                                   change_type_col: str,
-                                   payload_cols: list[str],
-                                   end_col: str | None,
-                                   inherit_identity: bool = False
-                                   ) -> DataFrame:
-        """DLT's ``IGNORE NULL UPDATES`` composed with SCD TYPE 2: a
-        NULL column in a non-delete change event means "keep the
-        previous value" — resolved SEQUENTIALLY per key so each opened
-        row version's payload is the inherited value AT its sequence
-        (last non-NULL across the seq-ordered events, seeded by the
-        key's existing OPEN row; a delete RESETS the chain — its epoch
-        starts at the delete row with a masked payload, so post-delete
-        NULL slots inherit nothing, the same hypothesis-found contract
-        as the SCD1 fold).  Returns the batch with payloads resolved;
-        the standard fold then applies unchanged.  One key shuffle;
-        the seed is a broadcast-keyed semi join against open rows.
+    def _resolve_null_updates(self, changes: DataFrame, keys: list[str],
+                              sequence_by: str, change_type_col: str,
+                              payload_cols: list[str]) -> DataFrame:
+        """DLT's ``IGNORE NULL UPDATES`` for the SCD TYPE 1 fold: a NULL
+        column in a non-delete change event means "keep the previous
+        value" — resolved SEQUENTIALLY per key (last non-NULL across the
+        seq-ordered events, seeded by one deterministic row per existing
+        key — max payload struct, since SCD1 targets normally hold one
+        row per key; a delete RESETS the chain — its epoch starts at the
+        delete row with a masked payload, so post-delete NULL slots
+        inherit nothing).  Returns the batch with payloads resolved; the
+        winner fold then applies unchanged.  One key shuffle; the seed
+        is a broadcast-keyed semi join.  Resolving as a PRE-step lets
+        the expectation gate evaluate the RESOLVED rows (ADVICE r11: a
+        NULL inherit slot is not a violation).
 
-        Identity columns never inherit (r12): each SCD2 history row is
-        a NEW row, so inheriting the open row's engine-assigned id into
-        the version a NULL slot opens would duplicate the identity
-        value across rows — NULL identity slots stay NULL and are
-        engine-assigned past the high-water mark like every other
-        path.  (SCD1 differs deliberately: there the row is UPDATED in
-        place, so "keep the previous value" correctly keeps its id —
-        ``inherit_identity=True``.)
-
-        Serves BOTH fold types (r12): ``end_col`` set → SCD2 shape,
-        seeded by each key's OPEN row; ``end_col=None`` → SCD1 shape,
-        seeded by one deterministic row per key (max payload struct —
-        SCD1 targets normally hold one row per key).  Resolving as a
-        PRE-step lets the expectation gate evaluate the RESOLVED rows
-        in both folds (ADVICE r11: a NULL inherit slot is not a
-        violation)."""
-        ident = set() if inherit_identity else set(self._identity_columns())
-        nonkey = [c for c in payload_cols
-                  if c not in keys and c not in ident]
-        carry = [c for c in payload_cols if c in ident and c not in keys]
+        Identity columns inherit like any other: the row is UPDATED in
+        place, so "keep the previous value" keeps its id.  (The SCD2
+        fold resolves inside ``_scd2_splice``, where identity never
+        inherits: each history row is a NEW row.)"""
+        nonkey = [c for c in payload_cols if c not in keys]
         seq_type = {f.name: f.dataType
                     for f in changes.schema.fields}[sequence_by]
         not_del = F.col(change_type_col) != "delete"
         ev = changes.select(
             *keys,
-            *[F.when(not_del, F.col(c)).alias(c)
-              for c in (*nonkey, *carry)],
+            *[F.when(not_del, F.col(c)).alias(c) for c in nonkey],
             F.col(sequence_by).alias("__seq"),
             F.col(change_type_col).alias("__ct"),
             F.lit(1).alias("__ord"))
         kset = changes.select(*keys).distinct()
-        seed_tail = [F.lit(None).cast(seq_type).alias("__seq"),
-                     F.lit("__seed__").alias("__ct"),
-                     F.lit(0).alias("__ord")]
-        if end_col is not None:
-            seed = (self._read_active()
-                    .filter(F.col(end_col).isNull())
-                    .join(F.broadcast(kset), keys, "left_semi")
-                    .select(*keys, *nonkey, *carry, *seed_tail))
-        else:
-            seed = (self._read_active()
-                    .join(F.broadcast(kset), keys, "left_semi")
-                    .groupBy(*keys)
-                    .agg(F.max(F.struct(*[F.col(c)
-                                          for c in (*nonkey, *carry)]))
-                         .alias("__s"))
-                    .select(*keys, "__s.*", *seed_tail))
+        seed = (self._read_active()
+                .join(F.broadcast(kset), keys, "left_semi")
+                .groupBy(*keys)
+                .agg(F.max(F.struct(*[F.col(c) for c in nonkey]))
+                     .alias("__s"))
+                .select(*keys, "__s.*",
+                        F.lit(None).cast(seq_type).alias("__seq"),
+                        F.lit("__seed__").alias("__ct"),
+                        F.lit(0).alias("__ord")))
         ev = ev.unionByName(seed)
         worder = [F.col("__ord"), F.col("__seq").asc_nulls_first()]
         w = Window.partitionBy(*keys).orderBy(*worder)
@@ -5833,7 +5802,6 @@ class TxLogTable:
                     *keys, "__ord",
                     *[F.last(F.col(c), ignorenulls=True).over(we).alias(c)
                       for c in nonkey],
-                    *[F.col(c) for c in carry],
                     F.col("__seq").alias(sequence_by),
                     F.col("__ct").alias(change_type_col))
                 .filter(F.col("__ord") == 1)
@@ -5854,8 +5822,8 @@ class TxLogTable:
         the full contract docstring): the change batch is bounded (its
         keys are broadcast throughout the fold) but frequently an
         expensive plan — a CDC transport read or streaming micro-batch —
-        and the fold evaluates it many times (dup check, frontier guard,
-        touched probe, history rewrite, tombstones, CDF images).
+        and the fold evaluates it many times (dup check, key ranges,
+        frontier guard, history re-fold, CDF images).
         Persist for the fold's duration so the transport runs once."""
         with self._pinned() as pin:
             return self._apply_changes_scd2_body(
@@ -5913,22 +5881,26 @@ class TxLogTable:
         that would rewrite closed rows raises instead of silently
         reordering history.  With
         ``allow_backfill=True`` (DLT's sequenced late-history backfill)
-        a below-frontier batch is accepted and SPLICED: each affected
-        key's full event timeline (reconstructed from its history rows
-        — deletes reappear as the end-sequences no successor row starts
-        at) is merged with the batch and re-folded, rewriting exactly
-        the segments holding those keys' chains; every other key's
-        history carries by reference.  The result equals what the chain
-        would have been had all events arrived in sequence order.
+        a below-frontier batch is accepted as well.
 
-        SINGLE-PASS like SCD1: only segments holding an OPEN row of a
-        batch key are rewritten (closed history rows never change, so a
-        well-maintained table rewrites only its "current" tail — the
-        property that keeps SCD2 viable at 100 TB); the batch-key range
-        rides the commit for other writers' OCC.  CDF emits
-        update_pre/postimages for the closed open-rows and inserts for
-        the new history rows (no ``delete`` images — SCD2 never removes
-        rows).  With ``txn_app_id`` + ``txn_version`` the apply is
+        ONE fold serves every batch (``_scd2_splice``): each affected
+        key's event timeline is reconstructed from its history rows,
+        merged with the batch and re-folded.  For an in-order batch the
+        timeline is just the key's OPEN row, so only segments holding an
+        open row of a batch key are rewritten (closed history rows never
+        change, so a well-maintained table rewrites only its "current"
+        tail — the property that keeps SCD2 viable at 100 TB); a
+        backfill re-folds each affected key's full chain (deletes
+        reappear as the end-sequences no successor row starts at),
+        rewriting exactly the segments holding those chains.  Every
+        other key's history carries by reference, and the result equals
+        what the chain would have been had all events arrived in
+        sequence order.  The batch-key range rides the commit for other
+        writers' OCC.  CDF emits update_pre/postimages for every
+        existing row the fold changed (the closed open row, for an
+        in-order batch) and inserts for the new history rows (no
+        ``delete`` images — SCD2 never removes rows).  With
+        ``txn_app_id`` + ``txn_version`` the apply is
         IDEMPOTENT (``append``'s txnAppId/txnVersion contract) — the
         exactly-once foundation for streaming CDC, where a replayed
         micro-batch would otherwise refuse on its own frontier.  See
@@ -5953,17 +5925,16 @@ class TxLogTable:
 
         ``ignore_null_updates=True`` (DLT's option, composed with SCD
         TYPE 2): a NULL column in a non-delete event means "keep the
-        previous value" — resolved sequentially per key BEFORE the
-        fold, so each opened row version carries the inherited value
-        at its sequence (seeded by the key's existing open row; a
-        delete resets the chain).  See
-        ``_scd2_resolve_null_updates``.  Composes with
-        ``allow_backfill`` (r12): the splice resolves inheritance over
-        the MERGED (reconstructed + late batch) timeline, so a spliced
-        event's NULL slots inherit from whatever precedes it in TRUE
-        sequence order and a recorded-NULL later version picks up a
-        spliced earlier value — equal to the in-order fold over the
-        recorded timeline plus the batch."""
+        previous value" — resolved sequentially per key over the MERGED
+        (reconstructed + batch) timeline, so each opened row version
+        carries the inherited value at its sequence (seeded by the
+        key's open row for an in-order batch; a delete resets the
+        chain).  Under ``allow_backfill`` (r12) a spliced event's NULL
+        slots inherit from whatever precedes it in TRUE sequence order
+        and a recorded-NULL later version picks up a spliced earlier
+        value — equal to the in-order fold over the recorded timeline
+        plus the batch.  The expectation gate then runs on the resolved
+        batch rows, after the frontier guard."""
         self._check_append_only("APPLY CHANGES")
         if any(s.get("always", True)
                for s in self._identity_columns().values()):
@@ -5989,14 +5960,13 @@ class TxLogTable:
             changes, exp_commit = self._apply_expectations(
                 changes, exempt=F.col(change_type_col) == "delete")
         # with IGNORE NULL UPDATES the gate moves AFTER inheritance
-        # resolution (below, or inside the splice for backfills): a NULL
-        # inherit slot evaluates a predicate to NULL and would count a
-        # row that RESOLVES to a passing value as a violation (ADVICE
-        # r11).  Gating resolved rows is also the stronger write-side
-        # contract: a row inheriting a bad value from an earlier
-        # (even dropped) event fails the gate itself — every WRITTEN
-        # row version passes, whether its values were explicit or
-        # inherited.
+        # resolution, inside the splice: a NULL inherit slot evaluates a
+        # predicate to NULL and would count a row that RESOLVES to a
+        # passing value as a violation (ADVICE r11).  Gating resolved
+        # rows is also the stronger write-side contract: a row
+        # inheriting a bad value from an earlier (even dropped) event
+        # fails the gate itself — every WRITTEN row version passes,
+        # whether its values were explicit or inherited.
         for c in (start_col, end_col):
             if c in cols:
                 raise ValueError(
@@ -6004,22 +5974,14 @@ class TxLogTable:
                     f"the history column {c!r} (the fold assigns it)")
         base_version = self.latest_version()
         _, schema_json = self._snapshot_files()
-        schema = T.StructType.fromJson(json.loads(schema_json))
-        have = {f.name: f.dataType for f in schema.fields}
+        target_cols = [f.name for f in T.StructType.fromJson(
+            json.loads(schema_json)).fields]
         for c in (start_col, end_col):
-            if c not in have:
+            if c not in target_cols:
                 raise ValueError(
                     f"apply_changes_scd2: target table lacks the history "
                     f"column {c!r}; create it with {start_col}/{end_col} "
                     "(sequence-typed, end NULL = current)")
-        seq_type = have[start_col]
-        dup = (changes.groupBy(*keys, sequence_by).count()
-               .filter(F.col("count") > 1).limit(1).count())
-        if dup:
-            raise ValueError(
-                "apply_changes_scd2: duplicate (key, sequence) in the "
-                "batch — sequencing is ambiguous; deduplicate upstream")
-        target_cols = [f.name for f in schema.fields]
         payload_cols = [c for c in target_cols
                         if c not in (start_col, end_col)]
         missing = [c for c in payload_cols if c not in cols]
@@ -6027,20 +5989,6 @@ class TxLogTable:
             raise ValueError(
                 f"apply_changes_scd2: change batch lacks target "
                 f"column(s) {missing}")
-        if ignore_null_updates and not allow_backfill:
-            # NULL event columns inherit sequentially (seeded by the
-            # open row, reset by deletes); the fold below then sees a
-            # fully-resolved batch.  The expectation gate runs on the
-            # RESOLVED rows (see above).  With allow_backfill the
-            # resolution instead rides the splice's re-fold over the
-            # merged timeline — see _scd2_splice(resolve_null_updates).
-            changes = self._scd2_resolve_null_updates(
-                changes, keys, sequence_by, change_type_col,
-                payload_cols, end_col)
-            changes, exp_commit = self._apply_expectations(
-                changes, exempt=F.col(change_type_col) == "delete")
-
-        seq = F.col(sequence_by).cast(seq_type)
         te = (self._key_list(track_history_except_columns)
               if track_history_except_columns else [])
         if te:
@@ -6059,356 +6007,198 @@ class TxLogTable:
                     "non-key payload column (identity columns are "
                     "engine-managed and never tracked) — nothing "
                     "would ever open a new history version")
-        if allow_backfill:
-            # r11: TRACK HISTORY EXCEPT composes with backfill — the
-            # splice reconstructs each affected key's timeline, merges
-            # the late batch, and re-folds WITH run collapse.  Note the
-            # operational semantics: an excluded-only event is an
-            # in-place refresh, never a recorded version, so a backfill
-            # cannot retroactively re-classify one (a late tracked
-            # change splicing INSIDE an absorbed run does not resurrect
-            # the run's interior boundaries — they were never history).
-            return self._scd2_splice(
-                changes, keys, seq, change_type_col, start_col, end_col,
-                payload_cols, target_cols, base_version,
-                txn_app_id, txn_version, track_except=te or None,
-                extra_commit=exp_commit,
-                resolve_null_updates=ignore_null_updates,
-                sequence_col=sequence_by)
-        if te:
-            # frontier guard (settled history stays immutable), then the
-            # open-row-scoped splice machinery does the run-collapsed
-            # fold — see TRACK HISTORY EXCEPT in _scd2_splice.  The
-            # guard joins on plain key equality (NULL keys never match),
-            # so it scans only files whose footer stats could hold a
-            # batch key (guide §6) instead of the full base — previously
-            # the one remaining full-table pre-check on this path; the
-            # same ranges ride into the splice so it skips its own
-            # key-stats aggregate.
-            firsts = changes.groupBy(*keys).agg(F.min(seq).alias("__first"))
-            aggs = []
-            for k in keys:
-                aggs += [F.min(k).alias(f"mn_{k}"),
-                         F.max(k).alias(f"mx_{k}")]
-            stats = changes.agg(*aggs).collect()[0]
-            ranges = [{"column": k, "min": _json_key(stats[f"mn_{k}"]),
-                       "max": _json_key(stats[f"mx_{k}"])} for k in keys]
-            late = (self._read_active(
-                        only=self._key_probe_candidates(ranges))
-                    .select(*keys, self._scd2_frontier(
-                        start_col, end_col).alias("__fr"))
-                    .join(F.broadcast(firsts), keys)
-                    .filter(F.col("__first") <= F.col("__fr"))
-                    .limit(1).count())
-            if late:
-                raise ValueError(
-                    "apply_changes_scd2: batch contains a sequence at "
-                    "or below an existing history event (a row's start "
-                    "OR the end that closed it) — rewriting settled "
-                    "history is not supported; sequence new events past "
-                    "the key's frontier or use allow_backfill")
-            return self._scd2_splice(
-                changes, keys, seq, change_type_col, start_col, end_col,
-                payload_cols, target_cols, base_version,
-                txn_app_id, txn_version, track_except=te,
-                scope_open_only=True, op_name="APPLY CHANGES SCD2",
-                extra_commit=exp_commit, key_ranges=ranges)
-        w = Window.partitionBy(*keys).orderBy(seq)
-        # one shuffle by key orders each chain; everything after is
-        # row-local: each non-delete event's end = the NEXT event's seq.
-        ev = (changes
-              .withColumn("__nxt", F.lead(seq).over(w))
-              .withColumn("__pdel", F.lag(
-                  F.col(change_type_col) == "delete").over(w)))
-        ups = (ev.filter(F.col(change_type_col) != "delete")
-               .select(*payload_cols,
-                       seq.alias(start_col),
-                       F.col("__nxt").alias(end_col)))
-        firsts = changes.groupBy(*keys).agg(F.min(seq).alias("__first"))
-        # key-range stats + delete count ride ONE aggregate job: the
-        # delete count decides whether the tombstone machinery below is
-        # in the plan at all (delete-free batches — the common streaming
-        # CDC shape — skip it entirely)
-        aggs = [F.sum((F.col(change_type_col) == "delete").cast("long"))
-                .alias("__ndel")]
-        for k in keys:
-            aggs += [F.min(k).alias(f"mn_{k}"), F.max(k).alias(f"mx_{k}")]
-        stats = changes.agg(*aggs).collect()[0]
-        has_dels = bool(stats["__ndel"])
-        ranges = [{"column": k, "min": _json_key(stats[f"mn_{k}"]),
-                   "max": _json_key(stats[f"mx_{k}"])} for k in keys]
-        key_range = ranges[0] if len(ranges) == 1 else ranges
+        return self._scd2_splice(
+            changes, keys, sequence_by, change_type_col, start_col,
+            end_col, payload_cols, target_cols, base_version, txn_app_id,
+            txn_version, backfill=allow_backfill, track_except=te,
+            extra_commit=exp_commit,
+            resolve_null_updates=ignore_null_updates)
 
-        # frontier guard + open-row probe join on plain key equality
-        # (NULL keys never match), so both scan only the files whose
-        # stats could hold a batch key (data skipping)
-        base = self._read_active(
-            with_file=True, only=self._key_probe_candidates(ranges))
-        # frontier guard: rewriting settled history is refused loudly.
-        # The frontier is the max EVENT sequence the key's history
-        # records — greatest(start, end) per row, not just start: a
-        # closed row [1, 5) means an event happened at 5 (the delete or
-        # supersession that closed it), so a batch sequenced at 3 would
-        # rewrite settled history even though 3 > the row's start.
-        late = (base.select(*keys, self._scd2_frontier(
-                    start_col, end_col).alias("__fr"))
-                .join(F.broadcast(firsts), keys)
-                .filter(F.col("__first") <= F.col("__fr"))
-                .limit(1).count())
-        if late:
-            raise ValueError(
-                "apply_changes_scd2: batch contains a sequence at or "
-                "below an existing history event (a row's start OR the "
-                "end that closed it) — rewriting settled history is "
-                "not supported; sequence new events past the key's "
-                "frontier or use allow_backfill")
-        # only segments holding an OPEN row of a batch key are touched —
-        # closed history never changes.
-        touched = self._touched_files(
-            base.filter(F.col(end_col).isNull())
-            .join(F.broadcast(firsts.select(*keys)), keys, "left_semi"))
-        # TOMBSTONES: a delete that closes NOTHING (its predecessor in
-        # the key's merged timeline is another delete, or it is the
-        # key's first event and the key has no open row) must still
-        # leave a trace, or a later sequenced backfill reconstructing
-        # the timeline from history rows would silently lose it (splice
-        # would re-open the chain the delete had kept closed).  It lands
-        # as a ZERO-WIDTH history row [seq, seq) — inert for any as-of
-        # predicate (start <= t < end matches no t) and recognizable by
-        # start == end, so the splice reads it back as a delete event.
-        new_rows = ups
-        if has_dels:
-            dels = ev.filter(F.col(change_type_col) == "delete")
-            tomb_first = dels.filter(F.col("__pdel").isNull())
-            if touched:
-                open_keyset = (self._read_active(only=touched)
-                               .filter(F.col(end_col).isNull())
-                               .join(F.broadcast(firsts.select(*keys)),
-                                     keys, "left_semi")
-                               .select(*keys).distinct())
-                tomb_first = tomb_first.join(F.broadcast(open_keyset),
-                                             keys, "left_anti")
-            tombstones = (dels.filter(
-                              F.col("__pdel").eqNullSafe(F.lit(True)))
-                          .unionByName(tomb_first)
-                          .select(*[F.col(c) if c in keys
-                                    else F.lit(None).cast(have[c]).alias(c)
-                                    for c in payload_cols],
-                                  seq.alias(start_col),
-                                  seq.alias(end_col)))
-            new_rows = ups.unionByName(tombstones)
-        with self._pinned() as pin:
-            new_rows, ident_actions = self._assign_identity(new_rows, pin)
-            closed = None
-            if touched:
-                seg = self._read_active_tracked(only=touched)
-                # carry: all closed rows, plus open rows of NON-batch keys
-                # (an all-column anti-join would mis-carry NULL payloads —
-                # NULL never equals NULL in a join — so scope by end+key).
-                keep = (seg.filter(F.col(end_col).isNotNull())
-                        .unionByName(
-                            seg.filter(F.col(end_col).isNull())
-                            .join(F.broadcast(firsts.select(*keys)), keys,
-                                  "left_anti")))
-                closed_cols = target_cols + (
-                    ["__rid"] if "__rid" in seg.columns else [])
-                closed = (seg.filter(F.col(end_col).isNull())
-                          .join(F.broadcast(firsts), keys)
-                          .withColumn(end_col, F.col("__first"))
-                          .select(*closed_cols))
-                merged = (keep.unionByName(closed)
-                          .unionByName(new_rows, allowMissingColumns=True))
-            else:
-                merged = new_rows
-            merged = self._apply_generated(merged)
-            self._validate_constraints(merged)
-
-            def cdf() -> DataFrame:
-                # zero-width tombstones are delete traces, not row
-                # versions — they never surface in the change feed (a
-                # downstream MV or CDC consumer would otherwise count
-                # phantom inserts)
-                ch = (new_rows.filter(F.col(end_col).isNull()
-                                      | (F.col(start_col) != F.col(end_col)))
-                      .withColumn("_change_type", F.lit("insert")))
-                if touched:
-                    pre = (self._read_active(only=touched)
-                           .filter(F.col(end_col).isNull())
-                           .join(F.broadcast(firsts.select(*keys)), keys,
-                                 "left_semi"))
-                    ch = (ch.unionByName(
-                              pre.withColumn("_change_type",
-                                             F.lit("update_preimage")),
-                              allowMissingColumns=True)
-                          .unionByName(
-                              self._drop_rid(closed).withColumn(
-                                  "_change_type", F.lit("update_postimage")),
-                              allowMissingColumns=True))
-                return ch
-
-            return self._commit_rewrite(
-                "APPLY CHANGES SCD2", base_version, touched, merged, cdf,
-                commit=exp_commit, key_range=key_range,
-                txn=(None if txn_app_id is None
-                     else (txn_app_id, txn_version)),
-                actions=self._scd2_mark_actions(start_col, end_col,
-                                                schema_json)
-                + ident_actions)
-
-    def _scd2_splice(self, changes: DataFrame, keys: list[str], seq,
-                     change_type_col: str, start_col: str, end_col: str,
+    def _scd2_splice(self, changes: DataFrame, keys: list[str],
+                     sequence_by: str, change_type_col: str,
+                     start_col: str, end_col: str,
                      payload_cols: list[str], target_cols: list[str],
                      base_version: int, txn_app_id: str | None,
-                     txn_version: int | None,
-                     track_except: list[str] | None = None,
-                     scope_open_only: bool = False,
-                     op_name: str = "APPLY CHANGES SCD2 BACKFILL",
-                     extra_commit: dict | None = None,
-                     resolve_null_updates: bool = False,
-                     sequence_col: str | None = None,
-                     key_ranges: list[dict] | None = None) -> int:
-        """Sequenced SCD2 backfill (``allow_backfill=True``): splice a
-        (possibly below-frontier) batch into each affected key's chain
-        by re-folding the key's FULL event timeline.  The timeline is
-        reconstructed losslessly from the history rows themselves: every
-        real row is an upsert event at its ``start_col``, every non-NULL
-        ``end_col`` that no same-key row starts at is a delete event
-        (normal supersessions chain end==next start), and every
-        ZERO-WIDTH tombstone row ``[s, s)`` — the persisted trace of a
-        delete that closed nothing (see ``apply_changes_scd2``) — is a
-        delete event at ``s``.  Batch events merge in by sequence and
-        the standard fold re-runs (deletes that still close nothing
-        re-emit as tombstones, so the output stays re-foldable) — the
-        result equals the chain had all events arrived in order.
+                     txn_version: int | None, backfill: bool,
+                     track_except: list[str], extra_commit: dict,
+                     resolve_null_updates: bool) -> int:
+        """The SCD2 fold (see ``_apply_changes_scd2_body`` for the
+        contract): splice the batch into each affected key's chain by
+        re-folding the key's event timeline merged with the batch.
 
-        Cost shape: rewrites exactly the segments holding an affected
-        key's rows (closed history of OTHER keys carries by reference);
-        the pair space is one key-shuffle over the affected chains plus
-        the batch.  Row tracking: existing history rows keep their row
-        ids through the re-fold (they are the same logical row versions,
-        even when their end bound moves); only genuinely new rows read
-        fresh ids.  GENERATED BY DEFAULT identity composes: re-folded
-        existing rows keep their identity values (payload carried
-        through the reconstruction), spliced batch rows with NULL slots
-        are engine-assigned past the high-water mark (ids burn, never
-        reuse — a re-emitted tombstone reads a fresh id, consistent with
-        the burn contract).  GENERATED ALWAYS was already refused at
-        ``apply_changes_scd2`` entry, same as every whole-row path."""
+        The timeline is reconstructed losslessly from the history rows
+        themselves: every real row is an upsert event at its
+        ``start_col``, every non-NULL ``end_col`` that no same-key row
+        starts at is a delete event (normal supersessions chain
+        end==next start), and every ZERO-WIDTH tombstone row ``[s, s)``
+        — the persisted trace of a delete that closed nothing — is a
+        delete event at ``s``.  Batch events merge in by sequence and
+        one fold runs: each non-delete event becomes a row ending at the
+        next event's sequence (NULL for the last), and deletes that
+        close nothing emit tombstones, so the output stays re-foldable.
+        The result equals the chain had all events arrived in order.
+
+        Scope.  An in-order batch (``backfill=False``) must pass the
+        frontier guard first; then only the key's OPEN row joins the
+        timeline (it is the one row a past-frontier batch can change),
+        only segments holding such a row are rewritten, and closed
+        history — tombstones included — carries by reference.  A
+        backfill re-folds the key's FULL chain, rewriting every segment
+        that holds one of its rows.
+
+        Cost shape: one guard-and-probe aggregate over the files whose
+        key stats could hold a batch key, then one key-shuffle over the
+        affected chains plus the batch.  Row tracking: existing history
+        rows keep their row ids through the re-fold (they are the same
+        logical row versions, even when their end bound moves); only
+        genuinely new rows read fresh ids.  GENERATED BY DEFAULT
+        identity composes: re-folded existing rows keep their identity
+        values (payload carried through the reconstruction), new rows
+        with NULL slots are engine-assigned past the high-water mark
+        (ids burn, never reuse — a re-emitted tombstone reads a fresh
+        id, consistent with the burn contract).  GENERATED ALWAYS was
+        already refused at ``apply_changes_scd2`` entry, same as every
+        whole-row path."""
         _, schema_json = self._snapshot_files()
         have = {f.name: f.dataType
                 for f in T.StructType.fromJson(json.loads(schema_json))}
-        kset = changes.select(*keys).distinct()
-        if key_ranges is None:
-            aggs = []
+        seq = F.col(sequence_by).cast(have[start_col])
+        with self._pinned() as pin:
+            # ONE aggregate over the batch: duplicate (key, sequence)
+            # refusal plus per-column key ranges (data skipping and the
+            # commit's OCC record)
+            aggs = [F.max("count").alias("__per_seq")]
             for k in keys:
                 aggs += [F.min(k).alias(f"mn_{k}"),
                          F.max(k).alias(f"mx_{k}")]
-            stats = kset.agg(*aggs).collect()[0]
+            stats = (changes.groupBy(*keys, sequence_by).count()
+                     .agg(*aggs).collect()[0])
+            if (stats["__per_seq"] or 0) > 1:
+                raise ValueError(
+                    "apply_changes_scd2: duplicate (key, sequence) in the "
+                    "batch — sequencing is ambiguous; deduplicate upstream")
             ranges = [{"column": k, "min": _json_key(stats[f"mn_{k}"]),
                        "max": _json_key(stats[f"mx_{k}"])} for k in keys]
-        else:
-            ranges = key_ranges  # caller already aggregated the batch
-        key_range = ranges[0] if len(ranges) == 1 else ranges
-        # the affected-chain probe joins on plain key equality (NULL
-        # keys never match), so it scans only the files whose stats
-        # could hold a batch key (data skipping)
-        base = self._read_active(
-            with_file=True, only=self._key_probe_candidates(ranges))
-        # scope_open_only (the TRACK HISTORY EXCEPT route, in-order
-        # batches): only segments holding an OPEN row of a batch key are
-        # touched and only open rows become events — closed history
-        # (incl. tombstones) carries by reference, exactly the main
-        # fold's copy-on-write scope.  Full-chain scope is the backfill
-        # splice (closed rows reconstruct so late events interleave).
-        hits = (base.filter(F.col(end_col).isNull())
-                if scope_open_only else base)
-        touched = self._touched_files(
-            hits.join(F.broadcast(kset), keys, "left_semi"))
-        existing = carry = None
-        rid: list[str] = []
-        if touched:
-            seg = self._read_active_tracked(only=touched)
-            rid = ["__rid"] if "__rid" in seg.columns else []
-            in_scope = (F.col(end_col).isNull() if scope_open_only
-                        else F.lit(True))
-            carry = (seg.filter(~in_scope).unionByName(
-                         seg.filter(in_scope)
-                         .join(F.broadcast(kset), keys, "left_anti"))
-                     if scope_open_only else
-                     seg.join(F.broadcast(kset), keys, "left_anti"))
-            existing = (seg.filter(in_scope)
-                        .join(F.broadcast(kset), keys, "left_semi"))
-
-        def null_payload(frame: DataFrame) -> list:
-            return [F.lit(None).cast(have[c]).alias(c)
-                    for c in payload_cols if c not in keys]
-
-        events = (changes.filter(F.col(change_type_col) != "delete")
-                  .select(*payload_cols, seq.alias("__seq"),
-                          F.lit(False).alias("__del")))
-        dels_new = (changes.filter(F.col(change_type_col) == "delete")
-                    .select(*[F.col(k) for k in keys],
-                            *null_payload(changes),
-                            seq.alias("__seq"),
-                            F.lit(True).alias("__del")))
-        events = events.unionByName(dels_new)
-        if resolve_null_updates:
-            # mark batch events — reconstructed history events union in
-            # below with allowMissingColumns (their __fb reads NULL),
-            # so the expectation gate can exempt everything already
-            # committed
-            events = events.withColumn("__fb", F.lit(True))
-        if existing is not None:
-            # zero-width rows [s, s) are TOMBSTONES — the persisted
-            # trace of deletes that closed nothing (see
-            # apply_changes_scd2); they read back as delete events (rid
-            # carried so the marker row keeps its id through re-folds),
-            # never as upserts, and never feed dangling-end detection.
-            is_tomb = (F.col(end_col).isNotNull()
-                       & (F.col(start_col) == F.col(end_col)))
-            real = existing.filter(~is_tomb)
-            tomb = existing.filter(is_tomb)
-            ups_exist = real.select(
-                *payload_cols, F.col(start_col).alias("__seq"),
-                F.lit(False).alias("__del"), *rid)
-            ends = real.filter(F.col(end_col).isNotNull()).select(
-                *[F.col(k) for k in keys], F.col(end_col).alias("__seq"))
-            starts = real.select(
-                *[F.col(k) for k in keys], F.col(start_col).alias("__seq"))
-            dels_exist = (ends.join(starts, [*keys, "__seq"], "left_anti")
-                          .select(*[F.col(k) for k in keys],
-                                  *null_payload(existing),
-                                  F.col("__seq"),
-                                  F.lit(True).alias("__del")))
-            dels_tomb = tomb.select(
-                *[F.col(k) for k in keys], *null_payload(existing),
-                F.col(start_col).alias("__seq"),
-                F.lit(True).alias("__del"), *rid)
-            events = (events
-                      .unionByName(ups_exist, allowMissingColumns=True)
-                      .unionByName(dels_exist, allowMissingColumns=True)
-                      .unionByName(dels_tomb, allowMissingColumns=True))
-        # the merged timeline is the splice's bounded working set
-        # (affected chains + batch) and feeds several passes (dup check,
-        # re-fold, rewrite, CDF diff) — pin it, and pin the re-fold input
-        # again below if resolution/collapse rebuilt it
-        with self._pinned() as pin:
+            # one row per batch key, broadcast by every later pass
+            firsts = pin(changes.groupBy(*keys)
+                         .agg(F.min(seq).alias("__first")))
+            kset = firsts.select(*keys)
+            # ONE probe over the files whose stats could hold a batch key
+            # (plain key equality — NULL keys never match, so the non-NULL
+            # bounds prune is sound): per file, does it hold an OPEN row
+            # of a batch key, and does a row of a batch key record an
+            # event at or past that key's first batch sequence (the
+            # frontier guard)?  The frontier is the max EVENT sequence
+            # the key's history records — greatest(start, end) per row,
+            # not just start: a closed row [1, 5) means an event happened
+            # at 5 (the delete or supersession that closed it), so a
+            # batch sequenced at 3 would rewrite settled history even
+            # though 3 > the start.
+            probe = (self._read_active(
+                         with_file=True,
+                         only=self._key_probe_candidates(ranges))
+                     .join(F.broadcast(firsts), keys)
+                     .groupBy("_file")
+                     .agg(F.max(F.col(end_col).isNull()).alias("__open"),
+                          F.max(F.col("__first") <= self._scd2_frontier(
+                              start_col, end_col)).alias("__late"))
+                     .collect())
+            if not backfill and any(r["__late"] for r in probe):
+                raise ValueError(
+                    "apply_changes_scd2: batch contains a sequence at or "
+                    "below an existing history event (a row's start OR "
+                    "the end that closed it) — rewriting settled history "
+                    "is not supported; sequence new events past the key's "
+                    "frontier or use allow_backfill")
+            touched = sorted(r["_file"] for r in probe
+                             if backfill or r["__open"])
+            null_payload = [F.lit(None).cast(have[c]).alias(c)
+                            for c in payload_cols if c not in keys]
+            events = (changes.filter(F.col(change_type_col) != "delete")
+                      .select(*payload_cols, seq.alias("__seq"),
+                              F.lit(False).alias("__del"))
+                      .unionByName(
+                          changes.filter(F.col(change_type_col) == "delete")
+                          .select(*keys, *null_payload, seq.alias("__seq"),
+                                  F.lit(True).alias("__del"))))
+            if resolve_null_updates:
+                # mark batch events — reconstructed history events union
+                # in below with allowMissingColumns (their __fb reads
+                # NULL), so the expectation gate can exempt everything
+                # already committed
+                events = events.withColumn("__fb", F.lit(True))
+            existing = carry = None
+            rid: list[str] = []
+            if touched:
+                seg = self._read_active_tracked(only=touched)
+                rid = ["__rid"] if "__rid" in seg.columns else []
+                # the rows that join the timeline: a backfill's full
+                # chains, an in-order batch's open rows; the rest carries
+                # as is (an all-column anti-join would mis-carry NULL
+                # payloads — NULL never equals NULL in a join — so scope
+                # by end + key)
+                in_scope = (F.lit(True) if backfill
+                            else F.col(end_col).isNull())
+                carry = seg.filter(~in_scope).unionByName(
+                    seg.filter(in_scope)
+                    .join(F.broadcast(kset), keys, "left_anti"))
+                existing = (seg.filter(in_scope)
+                            .join(F.broadcast(kset), keys, "left_semi"))
+                # zero-width rows [s, s) are TOMBSTONES — the persisted
+                # trace of deletes that closed nothing; they read back as
+                # delete events (rid carried so the marker row keeps its
+                # id through re-folds), never as upserts, and never feed
+                # dangling-end detection
+                is_tomb = (F.col(end_col).isNotNull()
+                           & (F.col(start_col) == F.col(end_col)))
+                real = existing.filter(~is_tomb)
+                events = events.unionByName(
+                    real.select(*payload_cols, F.col(start_col).alias("__seq"),
+                                F.lit(False).alias("__del"), *rid),
+                    allowMissingColumns=True)
+                if backfill:
+                    # closed history is in scope only for a backfill: an
+                    # end no same-key row starts at is a delete event
+                    ends = real.filter(F.col(end_col).isNotNull()).select(
+                        *keys, F.col(end_col).alias("__seq"))
+                    starts = real.select(*keys,
+                                         F.col(start_col).alias("__seq"))
+                    events = (
+                        events
+                        .unionByName(
+                            ends.join(starts, [*keys, "__seq"], "left_anti")
+                            .select(*keys, *null_payload, "__seq",
+                                    F.lit(True).alias("__del")),
+                            allowMissingColumns=True)
+                        .unionByName(
+                            existing.filter(is_tomb)
+                            .select(*keys, *null_payload,
+                                    F.col(start_col).alias("__seq"),
+                                    F.lit(True).alias("__del"), *rid),
+                            allowMissingColumns=True))
+            # the merged timeline is the splice's bounded working set
+            # (affected chains + batch) and feeds several passes (re-fold,
+            # rewrite, CDF diff) — pin it, and pin the re-fold input again
+            # below if resolution/collapse rebuilt it
             events = pin(events)
-            dup = (events.groupBy(*keys, "__seq").count()
-                   .filter(F.col("count") > 1).limit(1).count())
-            if dup:
+            # a (key, sequence) collision needs a backfill: duplicate
+            # pairs within the batch were refused above, and the frontier
+            # guard proved every in-order batch sequence lies above every
+            # existing event of its key
+            if backfill and (events.groupBy(*keys, "__seq").count()
+                             .filter(F.col("count") > 1).limit(1).count()):
                 raise ValueError(
                     "SCD2 backfill: a batch sequence collides with an "
                     "existing event at the same (key, sequence) — splicing "
                     "is ambiguous; re-sequence the backfill batch")
             if resolve_null_updates:
-                # IGNORE NULL UPDATES × sequenced backfill (r12, the r11
-                # verdict's top ask): the NULL-inheritance chain rides the
+                # IGNORE NULL UPDATES: the NULL-inheritance chain rides the
                 # re-fold — resolved over the MERGED timeline (reconstructed
-                # history events + the late batch) in sequence order, reset
-                # by delete events (tombstones reconstruct as deletes, so a
+                # history events + the batch) in sequence order, reset by
+                # delete events (tombstones reconstruct as deletes, so a
                 # post-delete NULL slot inherits nothing), seeded implicitly
-                # by each key's earliest event.  Reconstructed events carry
+                # by each key's earliest event — for an in-order batch, its
+                # open row.  Reconstructed events carry
                 # their RECORDED payloads — the raw NULL-ness of an
                 # already-folded event is not recorded — so the result
                 # equals the in-order fold over the RECORDED timeline plus
@@ -6419,8 +6209,9 @@ class TxLogTable:
                 # (no inheritable value existed at fold time) CAN now
                 # inherit from a spliced earlier event — exactly what the
                 # in-order fold would have produced.  Identity columns are
-                # engine-managed and never inherit (see
-                # _scd2_resolve_null_updates).
+                # engine-managed and never inherit: each history row is a
+                # NEW row, so inheriting the open row's id would duplicate
+                # it; NULL identity slots are engine-assigned below.
                 ident_cols = set(self._identity_columns())
                 inh = [c for c in payload_cols
                        if c not in keys and c not in ident_cols]
@@ -6441,12 +6232,12 @@ class TxLogTable:
                     # history is committed data and delete events carry
                     # masked payloads; restore the batch's own column names
                     # so predicates referencing the sequence / change-type
-                    # columns analyze exactly as in the in-order path
+                    # columns analyze exactly as at the entry gate
                     restore = []
                     gate = events
-                    if sequence_col and sequence_col not in gate.columns:
-                        gate = gate.withColumn(sequence_col, F.col("__seq"))
-                        restore.append(sequence_col)
+                    if sequence_by not in gate.columns:
+                        gate = gate.withColumn(sequence_by, F.col("__seq"))
+                        restore.append(sequence_by)
                     if change_type_col not in gate.columns:
                         gate = gate.withColumn(
                             change_type_col,
@@ -6457,7 +6248,7 @@ class TxLogTable:
                         gate,
                         exempt=~F.coalesce(F.col("__fb"), F.lit(False))
                         | F.col("__del"))
-                    extra_commit = {**(extra_commit or {}), **exp_commit}
+                    extra_commit = {**extra_commit, **exp_commit}
                     events = gated.drop(*restore) if restore else gated
             w = Window.partitionBy(*keys).orderBy("__seq")
             if track_except:
@@ -6510,26 +6301,20 @@ class TxLogTable:
             ev = (events
                   .withColumn("__nxt", F.lead("__seq").over(w))
                   .withColumn("__pdel", F.lag("__del").over(w)))
-            rid_cols = [F.col(c) for c in rid] if existing is not None else []
-            refold_cols = (payload_cols
-                           + [F.col("__seq").alias(start_col),
-                              F.col("__nxt").alias(end_col)]
-                           + rid_cols)
-            # deletes that close nothing in the re-folded timeline (first
-            # event for the key, or preceded by another delete) re-emit as
-            # zero-width tombstone rows — the splice output stays losslessly
-            # re-foldable by the NEXT backfill (delete events already carry
-            # NULL payload, so the same projection works).
-            tomb_cols = (payload_cols
-                         + [F.col("__seq").alias(start_col),
-                            F.col("__seq").alias(end_col)]
-                         + rid_cols)
-            refolded = (ev.filter(~F.col("__del")).select(*refold_cols)
-                        .unionByName(
-                            ev.filter(F.col("__del")
-                                      & (F.col("__pdel").isNull()
-                                         | F.col("__pdel")))
-                            .select(*tomb_cols)))
+            # each non-delete event becomes the row [seq, next seq); a
+            # delete that closes nothing in the re-folded timeline (first
+            # event for the key, or preceded by another delete) re-emits
+            # as a zero-width tombstone row [seq, seq) — the output stays
+            # losslessly re-foldable by the NEXT backfill (delete events
+            # already carry NULL payload).  One projection, so both
+            # window functions share one key shuffle.
+            refolded = (ev.filter(~F.col("__del")
+                                  | F.coalesce(F.col("__pdel"), F.lit(True)))
+                        .select(*payload_cols,
+                                F.col("__seq").alias(start_col),
+                                F.when(F.col("__del"), F.col("__seq"))
+                                .otherwise(F.col("__nxt")).alias(end_col),
+                                *rid))
             # BY DEFAULT identity: NULL slots (spliced batch rows) are
             # engine-assigned BEFORE the carry union so the CDF images below
             # see the stamped values; carried/re-folded rows keep theirs
@@ -6546,8 +6331,10 @@ class TxLogTable:
                                 F.col(end_col).isNull()
                                 | (F.col(start_col) != F.col(end_col)))
                             .withColumn("_change_type", F.lit("insert")))
-                old_plain = existing.select(*target_cols)
-                o = old_plain.select(
+                # each re-folded row against the existing row it continues
+                # (same key and start); existing rows the re-fold dropped
+                # (absorbed tombstones or runs) emit no image
+                o = existing.select(
                     *[F.col(c).alias(f"o_{c}") for c in target_cols])
                 n = new_plain.select(
                     *[F.col(c).alias(f"n_{c}") for c in target_cols])
@@ -6555,15 +6342,13 @@ class TxLogTable:
                     F.col(f"n_{start_col}"))
                 for k in keys:
                     jc = jc & F.col(f"o_{k}").eqNullSafe(F.col(f"n_{k}"))
-                j = o.join(n, jc, "full_outer")
+                j = n.join(o, jc, "left")
                 same = F.lit(True)
                 for c in target_cols:
                     same = same & F.col(f"o_{c}").eqNullSafe(
                         F.col(f"n_{c}"))
                 changed = j.filter(
-                    F.col(f"o_{start_col}").isNotNull()
-                    & F.col(f"n_{start_col}").isNotNull()
-                    & ~same)
+                    F.col(f"o_{start_col}").isNotNull() & ~same)
                 pre = changed.select(
                     *[F.col(f"o_{c}").alias(c) for c in target_cols]
                 ).withColumn("_change_type", F.lit("update_preimage"))
@@ -6571,7 +6356,7 @@ class TxLogTable:
                     *[F.col(f"n_{c}").alias(c) for c in target_cols]
                 ).withColumn("_change_type", F.lit("update_postimage"))
                 # re-emitted tombstones stay out of the feed (delete
-                # traces, not row versions — same as the main fold)
+                # traces, not row versions)
                 ins = (j.filter(F.col(f"o_{start_col}").isNull())
                        .select(*[F.col(f"n_{c}").alias(c)
                                  for c in target_cols])
@@ -6581,8 +6366,9 @@ class TxLogTable:
                 return pre.unionByName(post).unionByName(ins)
 
             return self._commit_rewrite(
-                op_name, base_version, touched, merged, cdf,
-                commit=extra_commit, key_range=key_range,
+                "APPLY CHANGES SCD2 BACKFILL" if backfill
+                else "APPLY CHANGES SCD2", base_version, touched, merged, cdf,
+                commit=extra_commit, key_ranges=ranges,
                 txn=(None if txn_app_id is None
                      else (txn_app_id, txn_version)),
                 actions=self._scd2_mark_actions(start_col, end_col,

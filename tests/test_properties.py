@@ -703,7 +703,9 @@ def test_apply_changes_scd2_equals_python_fold(spark, tmp_path_factory,
     sequence order — each non-delete event opens a history row closed by
     the next event, deletes close without opening, the pre-existing open
     row closes at the key's first event — regardless of arrival order
-    (the batch is delivered fully inverted)."""
+    (the batch is delivered fully inverted).  The commit's change feed
+    holds the pre/post images of each closed open row and an insert per
+    new row version: no tombstone and no delete images."""
     import os
     import uuid as _uuid
 
@@ -714,7 +716,8 @@ def test_apply_changes_scd2_equals_python_fold(spark, tmp_path_factory,
         spark, os.path.join(str(base), "t"),
         spark.createDataFrame([(k, v, 0, None) for k, v in data],
                               "k int, v int, __START_AT int, "
-                              "__END_AT int"))
+                              "__END_AT int"),
+        enable_cdf=True)
     seq_of: dict[int, int] = {}
     rows = []
     for k, v, ct in events:
@@ -723,7 +726,7 @@ def test_apply_changes_scd2_equals_python_fold(spark, tmp_path_factory,
     shuffled = list(reversed(rows))  # worst-case arrival inversion
     changes = spark.createDataFrame(
         shuffled, "k int, v int, seq int, _change_type string")
-    t.apply_changes_scd2(changes, key="k", sequence_by="seq")
+    version = t.apply_changes_scd2(changes, key="k", sequence_by="seq")
     # pure-Python sequential SCD2 fold over the ORDERED events; deletes
     # that close nothing persist as zero-width tombstone rows [s, s)
     # (the lossless trace a later sequenced backfill re-folds from)
@@ -759,6 +762,16 @@ def test_apply_changes_scd2_equals_python_fold(spark, tmp_path_factory,
         ((r["k"], r["v"], r["__START_AT"], r["__END_AT"])
          for r in t.read().collect()), key=key_fn) == \
         sorted((h for h in hist if h[2] != h[3]), key=key_fn)
+    cdf = [(k, v, 0, None, "update_preimage") for k, v in data
+           if k in by_key]
+    cdf += [(k, v, 0, by_key[k][0][0], "update_postimage")
+            for k, v in data if k in by_key]
+    cdf += [(*h, "insert") for h in hist[len(data):] if h[2] != h[3]]
+    assert sorted(
+        ((r["k"], r["v"], r["__START_AT"], r["__END_AT"], r["_change_type"])
+         for r in t.read_changes(version, version).collect()),
+        key=lambda x: (*key_fn(x), x[4])) == \
+        sorted(cdf, key=lambda x: (*key_fn(x), x[4]))
 
 
 # -- r8: row-tracking invariants under arbitrary DML -------------------------

@@ -6472,6 +6472,30 @@ def test_merge_upsert_composite_key(spark, tdir):
             spark.createDataFrame([(1, 5)], "a int, v int"), ["a", "b"])
 
 
+def test_txn_composite_key_merge_commits_merged_key_ranges(spark, tdir):
+    """A composite-key merge_upsert staged inside a transaction commits:
+    the TXN commit records one merged keyRanges entry per key column,
+    spanning every staged statement."""
+    t = TxLogTable.create(
+        spark, tdir,
+        spark.createDataFrame([(1, 1, 10), (1, 2, 20), (2, 1, 30)],
+                              "a int, b int, v int"))
+    t.begin_transaction()
+    t.merge_upsert(
+        spark.createDataFrame([(1, 2, 99), (2, 5, 40)],
+                              "a int, b int, v int"), ["a", "b"])
+    t.merge_upsert(
+        spark.createDataFrame([(4, 0, 7)], "a int, b int, v int"),
+        ["a", "b"])
+    t.commit_transaction()
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (1, 1, 10), (1, 2, 99), (2, 1, 30), (2, 5, 40), (4, 0, 7)]
+    last = t.history()[-1]
+    assert last["op"] == "TXN" and last["statements"] == 2
+    assert last["keyRanges"] == [{"column": "a", "min": 1, "max": 4},
+                                 {"column": "b", "min": 0, "max": 5}]
+
+
 def test_merge_full_composite_key(spark, tdir):
     """Full-clause MERGE on a composite key: matched/not-matched/by-
     source arms all resolve on the (a, b) pair."""

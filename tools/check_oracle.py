@@ -112,6 +112,15 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def session_alive(spark) -> bool:
+    """True when the Spark session still runs a trivial job."""
+    try:
+        spark.range(1).collect()
+        return True
+    except Exception:  # noqa: BLE001
+        return False
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -124,7 +133,7 @@ def main() -> int:
     con = duck_con(args.sf)
 
     n_pass = n_fail = n_rowsonly = 0
-    for name in names:
+    for i, name in enumerate(names):
         spec = specs[name]
         t0 = time.time()
         try:
@@ -134,6 +143,13 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
             n_fail += 1
+            if not session_alive(spark):
+                # a lost JVM would fail every remaining query the same way
+                print(f"ABORT spark session lost after {name}: "
+                      f"{len(names) - i - 1} queries not run")
+                print(f"\n{n_pass} pass, {n_fail} fail, "
+                      f"{n_rowsonly} rows-only")
+                return 2
             continue
         dt = time.time() - t0
         if spec.oracle is None:

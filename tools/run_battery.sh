@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Property battery: the fold/splice/refresh equivalence properties guard
-# the hardest invariants in the engine (splice == in-order fold, MV
-# incremental == full recompute, CDC fold == pure-Python fold, ...).
+# the hardest invariants in the engine (SCD2 fold and backfill splice ==
+# pure-Python in-order fold, MV incremental == full recompute, CDC fold
+# == pure-Python fold, ...).
 # The default per-run budget (5 examples) is deliberately small so the
 # regular suite stays fast — this script re-runs JUST those properties
 # with a 100-example budget and a fixed derandomized seed.  Run it once
