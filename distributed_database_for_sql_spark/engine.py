@@ -1038,8 +1038,8 @@ class Engine:
         HLL sketch column ``__mv_hll_<alias>`` — inserts union into the
         sketch, removals repair through the bounded per-group
         recompute), plus an
-        optional WHERE clause filtering the source rows (applied to the
-        initial scan AND every delta fold).  SUM/AVG ride hidden
+        optional WHERE clause filtering the source rows (applied to
+        every fold).  SUM/AVG ride hidden
         non-NULL counters (``__mv_nn_<alias>``, plus ``__mv_sum_`` for
         AVG) so a group whose last non-NULL contributor is deleted
         correctly returns to NULL instead of 0; MIN/MAX fold inserts
@@ -1053,8 +1053,8 @@ class Engine:
 
         STAR-JOIN shape: ``FROM fact JOIN dim ON fact.k = dim.k ...``
         composes — the fact side must be the txlog table (its CDF
-        drives maintenance); joined sides are broadcast into both the
-        initial scan and each delta fold.  Select/group columns stay
+        drives maintenance); joined sides are broadcast into every
+        fold.  Select/group columns stay
         unqualified (must be unambiguous post-join).  A dim that is
         ITSELF a txlog table composes (r11): its version rides the MV
         as a marker, REFRESH detects dim churn metadata-only and
@@ -1186,35 +1186,36 @@ class Engine:
 
     @staticmethod
     def _mv_full_aggs(counts, sums, avgs, mins, maxs, cnts=(),
-                      approxs=(), prefix=""):
-        """The from-scratch aggregate list shared by CREATE's schema
-        probe, the initial fill, and FULL recompute: visible aggregates
-        plus the hidden SUM/AVG maintenance state (``__mv_nn_<a>``
-        non-NULL counters; ``__mv_sum_<a>`` running sums for AVG) and
-        the hidden mergeable HLL sketch state (``__mv_hll_<a>``) behind
-        each APPROX_COUNT_DISTINCT item."""
+                      approxs=()):
+        """The MV's schema definition: the from-scratch aggregate list
+        whose result types CREATE's schema probe and the legacy-schema
+        migration read — visible aggregates plus the hidden SUM/AVG
+        maintenance state (``__mv_nn_<a>`` non-NULL counters;
+        ``__mv_sum_<a>`` running sums for AVG) and the hidden mergeable
+        HLL sketch state (``__mv_hll_<a>``) behind each
+        APPROX_COUNT_DISTINCT item.  Refreshes never run it: they fill
+        these columns through the one signed-delta fold in
+        ``refresh_materialized_view``."""
         from pyspark.sql import functions as F
-        p = prefix
-        aggs = [F.count("*").alias(f"{p}{c}") for c in counts]
+        aggs = [F.count("*").alias(c) for c in counts]
         for a, e in sums.items():
-            aggs += [F.sum(F.expr(e)).alias(f"{p}{a}"),
-                     F.count(F.expr(e)).alias(f"{p}__mv_nn_{a}")]
+            aggs += [F.sum(F.expr(e)).alias(a),
+                     F.count(F.expr(e)).alias(f"__mv_nn_{a}")]
         for a, e in avgs.items():
-            aggs += [F.avg(F.expr(e)).alias(f"{p}{a}"),
-                     F.sum(F.expr(e)).alias(f"{p}__mv_sum_{a}"),
-                     F.count(F.expr(e)).alias(f"{p}__mv_nn_{a}")]
+            aggs += [F.avg(F.expr(e)).alias(a),
+                     F.sum(F.expr(e)).alias(f"__mv_sum_{a}"),
+                     F.count(F.expr(e)).alias(f"__mv_nn_{a}")]
         for a, e in mins.items():
-            aggs.append(F.min(F.expr(e)).alias(f"{p}{a}"))
+            aggs.append(F.min(F.expr(e)).alias(a))
         for a, e in maxs.items():
-            aggs.append(F.max(F.expr(e)).alias(f"{p}{a}"))
+            aggs.append(F.max(F.expr(e)).alias(a))
         for a, e in dict(cnts).items():
-            aggs.append(F.count(F.expr(e)).alias(f"{p}{a}"))
+            aggs.append(F.count(F.expr(e)).alias(a))
         for a, e in dict(approxs).items():
             aggs += [
                 F.expr(f"COALESCE(hll_sketch_estimate("
-                       f"hll_sketch_agg({e})), 0)").alias(f"{p}{a}"),
-                F.expr(f"hll_sketch_agg({e})")
-                .alias(f"{p}__mv_hll_{a}"),
+                       f"hll_sketch_agg({e})), 0)").alias(a),
+                F.expr(f"hll_sketch_agg({e})").alias(f"__mv_hll_{a}"),
             ]
         return aggs
 
@@ -1274,21 +1275,27 @@ class Engine:
     def refresh_materialized_view(self, name: str,
                                   full: bool = False) -> DataFrame:
         """REFRESH MATERIALIZED VIEW: advance the stored aggregate to
-        the source's current version.  First refresh (no fold marker)
-        computes the aggregate with ONE full scan; every later refresh
-        folds ONLY the source's CDF rows since the last refreshed
-        version into signed per-group deltas and MERGEs them in (dead
-        groups delete, changed groups update arithmetically, new groups
-        insert).  The fold position rides the MERGE commit itself as a
-        ``txn`` action (appId ``mv::<name>``), so a crashed/replayed
-        refresh can never double-apply — the same exactly-once contract
-        as the streaming sinks.
+        the source's current version with ONE fold — a
+        ``groupBy(*groups).agg(...)`` of signed per-group deltas over one
+        row source, MERGEd into the stored state.
 
-        ``full=True`` (``REFRESH ... FULL``) recomputes the aggregate
-        from scratch and REPLACES the stored state (matched groups set,
-        absent groups delete via the by-source arm) — the repair path
-        after something outside the CDF contract changed, e.g. a static
-        dimension was edited."""
+        An incremental refresh folds ONLY the source's CDF rows since
+        the last refreshed version (inserts add, removals subtract) and
+        MERGEs the deltas in: dead groups delete, changed groups update
+        arithmetically, new groups insert.  A group that saw a removal
+        re-derives MIN/MAX/APPROX_COUNT_DISTINCT through a bounded
+        per-group recompute.  The fold position rides the MERGE commit
+        itself as a ``txn`` action (appId ``mv::<name>``), so a
+        crashed/replayed refresh can never double-apply — the same
+        exactly-once contract as the streaming sinks.
+
+        ``full=True`` (``REFRESH ... FULL``) folds the snapshot at the
+        current version with every row an insert, so the delta IS the
+        whole state; it REPLACES the stored state (matched groups take
+        the fold's values, absent groups delete via the by-source arm)
+        — the repair path after something outside the CDF contract
+        changed, e.g. a static dimension was edited.  The first refresh
+        (no fold marker yet) is a FULL refresh into the empty MV."""
         from pyspark.sql import functions as F
 
         mv = self.txlog_tables[name]
@@ -1378,137 +1385,59 @@ class Engine:
             for c in missing:
                 mv.add_column(c, probe[c])
             full = True
-        if full:
-            recompute = (self._mv_row_source(src.read(version=cur), joins,
-                                             where, gexprs)
-                         .groupBy(*groups)
-                         .agg(*self._mv_full_aggs(counts, sums, avgs,
-                                                  mins, maxs, cnts,
-                                                  approxs,
-                                                  prefix="__d_")))
-            repl = {c: f"s.__d_{c}" for c in counts}
-            repl.update({a: f"s.__d_{a}" for a in
-                         list(sums) + list(avgs) + list(mins)
-                         + list(maxs) + list(cnts) + list(approxs)})
-            repl.update({f"__mv_nn_{a}": f"s.{dnn(a)}"
-                         for a in list(sums) + list(avgs)})
-            repl.update({f"__mv_sum_{a}": f"s.{dsum(a)}" for a in avgs})
-            repl.update({f"__mv_hll_{a}": f"s.__d___mv_hll_{a}"
-                         for a in approxs})
-            ins = dict(repl)
-            ins.update({g: f"s.{g}" for g in groups})
-            # A FULL refresh is idempotent by construction (replace
-            # semantics), so it needs no replay guard of its own — the
-            # fold marker only advances when the recompute also covers
-            # source versions the incremental path hasn't folded yet.
-            # When the marker is already at head (repairing a changed
-            # dim), commit WITHOUT the marker so the replace is never
-            # skipped as a replayed fold.
-            txn = {"txn_app_id": app, "txn_version": cur} if last < cur \
-                else {}
-            post_props: dict[str, str] = {}
-            if cur_dims and cur_dims != {
-                    d: int(v) for d, v in dim_vers.items()}:
-                post_props["mv.dimVersions"] = json.dumps(
-                    cur_dims, sort_keys=True)
-            if audit_clean_pending:
-                post_props["mv.scd2TombstoneAudit"] = "clean"
-            if post_props:
-                # ADVICE r11: marker and fold advance ATOMICALLY — with
-                # a separate set_properties commit, a crash between the
-                # two left the marker stale and the NEXT refresh redid
-                # the whole FULL recompute (benign but a surprise cost
-                # at 100 TB).  Staging both in one table transaction
-                # lands them as ONE commit/version.  cur_dims was
-                # captured BEFORE the recompute read the dims, so a
-                # concurrent dim write leaves its marker below head and
-                # triggers exactly one more FULL — conservative, never
-                # stale-serving.
-                mv.begin_transaction()
-            try:
-                mv.merge_full(
-                    recompute, groups,
-                    when_matched=[{"action": "update", "set": repl}],
-                    when_not_matched=[{"action": "insert",
-                                       "values": ins}],
-                    when_not_matched_by_source=[{"action": "delete"}],
-                    **txn)
-                if post_props:
-                    mv.set_properties(post_props)
-            except BaseException:
-                if post_props:
-                    mv.rollback_transaction()
-                raise
-            if post_props:
-                mv.commit_transaction()
-            return self._dml_ack(name, mv.latest_version())
-        if last >= cur:
-            return self._dml_ack(name, mv.latest_version())  # up to date
-        dt = dict(mv.read().dtypes)
         if last < 0:
-            # initial fill: one full scan of the CURRENT snapshot;
-            # MIN/MAX land under their insert-fold names (__i_/__x_)
-            # so the shared merge expressions below serve both paths
-            rows = self._mv_row_source(src.read(version=cur), joins,
-                                       where, gexprs)
-            delta = (rows.groupBy(*groups).agg(
-                *([F.count("*").alias(f"__d_{c}") for c in counts]
-                  + [x for a, e in sums.items()
-                     for x in (F.sum(F.expr(e)).alias(f"__d_{a}"),
-                               F.count(F.expr(e)).alias(dnn(a)))]
-                  + [x for a, e in avgs.items()
-                     for x in (F.sum(F.expr(e)).alias(dsum(a)),
-                               F.count(F.expr(e)).alias(dnn(a)))]
-                  + [F.min(F.expr(e)).alias(f"__i_{a}")
-                     for a, e in mins.items()]
-                  + [F.max(F.expr(e)).alias(f"__x_{a}")
-                     for a, e in maxs.items()]
-                  + [F.count(F.expr(e)).alias(f"__d_{a}")
-                     for a, e in cnts.items()]
-                  + [F.expr(f"hll_sketch_agg({e})")
-                     .alias(f"__d_hll_{a}")
-                     for a, e in approxs.items()])))
-            repair = False
+            full = True  # the first refresh folds into the empty MV
+        if not full and last >= cur:
+            return self._dml_ack(name, mv.latest_version())  # up to date
+        # ONE fold for every refresh: signed per-group deltas over one
+        # row source.  Incremental folds the CDF rows since the marker;
+        # FULL folds the snapshot at ``cur`` with every row an insert,
+        # so its "delta" is the whole state.
+        if full:
+            rows = src.read(version=cur).withColumn(
+                "_change_type", F.lit("insert"))
         else:
-            ch = self._mv_row_source(src.read_changes(last + 1, cur),
-                                     joins, where, gexprs)
-            added = F.col("_change_type").isin("insert", "update_postimage")
-            sign = F.when(added, F.lit(1)).otherwise(F.lit(-1))
-            nn_of = lambda e: sign * F.expr(e).isNotNull().cast("long")  # noqa: E731
-            minmax_aggs = (
-                [F.min(F.when(added, F.expr(e))).alias(f"__i_{a}")
+            rows = src.read_changes(last + 1, cur)
+        ch = self._mv_row_source(rows, joins, where, gexprs)
+        added = F.col("_change_type").isin("insert", "update_postimage")
+        # negate, never multiply by an INT sign: a DECIMAL times INT
+        # widens by 11 digits and loses its scale past 38
+        signed = lambda c: F.when(added, c).otherwise(-c)  # noqa: E731
+        nn_of = lambda e: signed(  # noqa: E731
+            F.expr(e).isNotNull().cast("long"))
+        delta = ch.groupBy(*groups).agg(
+            *([F.sum(signed(F.lit(1))).alias(f"__d_{c}") for c in counts]
+              + [x for a, e in sums.items()
+                 for x in (F.sum(signed(F.expr(e))).alias(f"__d_{a}"),
+                           F.sum(nn_of(e)).alias(dnn(a)))]
+              + [x for a, e in avgs.items()
+                 for x in (F.sum(signed(F.expr(e))).alias(dsum(a)),
+                           F.sum(nn_of(e)).alias(dnn(a)),
+                           # AVG's own division, exact to the stored
+                           # scale: the value of an insert-only group
+                           F.avg(F.expr(e)).alias(f"__d_{a}"))]
+              + [F.sum(nn_of(e)).alias(f"__d_{a}")
+                 for a, e in cnts.items()]
+              + [F.min(F.when(added, F.expr(e))).alias(f"__i_{a}")
                  for a, e in mins.items()]
-                + [F.max(F.when(added, F.expr(e))).alias(f"__x_{a}")
-                   for a, e in maxs.items()]
-                # HLL sketches fold inserts only (union); removals need
-                # the same bounded repair as MIN/MAX (sketches cannot
-                # subtract)
-                + [F.expr(f"hll_sketch_agg(CASE WHEN _change_type IN "
-                          f"('insert', 'update_postimage') THEN {e} "
-                          f"END)").alias(f"__d_hll_{a}")
-                   for a, e in approxs.items()])
-            if mins or maxs or approxs:
-                # any removed row (delete / update preimage) can lower a
-                # MAX, raise a MIN, or retire a distinct value — those
-                # groups need a bounded recompute (repair), identified
-                # right here in the CDF
-                minmax_aggs.append(
-                    F.max(F.when(added, F.lit(0)).otherwise(F.lit(1)))
-                    .alias("__rep"))
-            delta = (ch.groupBy(*groups).agg(
-                *([F.sum(sign).alias(f"__d_{c}") for c in counts]
-                  + [x for a, e in sums.items()
-                     for x in (F.sum(sign * F.expr(e)).alias(f"__d_{a}"),
-                               F.sum(nn_of(e)).alias(dnn(a)))]
-                  + [x for a, e in avgs.items()
-                     for x in (F.sum(sign * F.expr(e)).alias(dsum(a)),
-                               F.sum(nn_of(e)).alias(dnn(a)))]
-                  + [F.sum(nn_of(e)).alias(f"__d_{a}")
-                     for a, e in cnts.items()]
-                  + minmax_aggs)))
-            # drop no-op groups (count unchanged, every sum/avg delta and
-            # non-NULL-count delta zero, no MIN/MAX-relevant change):
-            # their segments must not be rewritten
+              + [F.max(F.when(added, F.expr(e))).alias(f"__x_{a}")
+                 for a, e in maxs.items()]
+              # HLL sketches fold inserts only (union); removals need
+              # the same bounded repair as MIN/MAX (sketches cannot
+              # subtract)
+              + [F.expr(f"hll_sketch_agg(CASE WHEN _change_type IN "
+                        f"('insert', 'update_postimage') THEN {e} "
+                        f"END)").alias(f"__d_hll_{a}")
+                 for a, e in approxs.items()]
+              # any removed row (delete / update preimage) can lower a
+              # MAX, raise a MIN, or retire a distinct value — those
+              # groups need a bounded recompute (repair)
+              + [F.max(F.when(added, F.lit(0)).otherwise(F.lit(1)))
+                 .alias("__rep")]))
+        if not full:
+            # drop no-op groups (count unchanged, every sum/avg delta
+            # and non-NULL-count delta zero, no MIN/MAX-relevant
+            # change): their segments must not be rewritten
             nonzero = " OR ".join(
                 [f"__d_{c} <> 0" for c in counts]
                 + [f"(__d_{a} IS NOT NULL AND __d_{a} <> 0)"
@@ -1522,15 +1451,16 @@ class Engine:
                 + [f"__x_{a} IS NOT NULL" for a in maxs]
                 + [f"__d_hll_{a} IS NOT NULL" for a in approxs])
             delta = delta.filter(F.expr(nonzero))
-            repair = bool(mins or maxs or approxs) and \
-                delta.filter("__rep = 1").limit(1).count() > 0
+        dt = dict(mv.read().dtypes)
         rcol = lambda a: f"__r_{a}"  # noqa: E731
         rhll = lambda a: f"__r_hll_{a}"  # noqa: E731
-        if (mins or maxs or approxs) and repair:
+        if (mins or maxs or approxs) and not full:
             # bounded repair: recompute MIN/MAX from the CURRENT source
             # snapshot for EXACTLY the groups that saw a removal — a
             # null-safe (struct-packed) semi join prunes the scan to
-            # affected groups; cost ∝ their row share, never table size
+            # affected groups; cost ∝ their row share, never table size.
+            # A fold with no removals broadcasts an empty key set, and
+            # AQE skips the scan.
             mk = F.struct(*[F.col(g) for g in groups]).alias("_mk")
             rep_keys = (delta.filter("__rep = 1")
                         .select(mk).distinct())
@@ -1552,14 +1482,12 @@ class Engine:
                          "_mk", "left")
                      .drop("_mk"))
         elif mins or maxs or approxs:
+            # a FULL fold has no removals, so it never reads the repair
             delta = delta.withColumns(
                 {**{rcol(a): F.expr(f"CAST(NULL AS {dt[a]})")
                     for a in list(mins) + list(maxs)},
                  **{rhll(a): F.expr("CAST(NULL AS BINARY)")
                     for a in approxs}})
-        if (mins or maxs or approxs) and "__rep" not in delta.columns:
-            delta = delta.withColumn("__rep", F.lit(0))
-        c0 = counts[0]
         dead = " AND ".join(f"t.{c} + s.__d_{c} = 0" for c in counts)
         upd = {c: f"t.{c} + s.__d_{c}" for c in counts}
         for a in sums:
@@ -1608,9 +1536,10 @@ class Engine:
             ins[a] = f"s.__d_{a}"
             ins[f"__mv_nn_{a}"] = f"s.{dnn(a)}"
         for a in avgs:
-            ins[a] = (f"CASE WHEN COALESCE(s.{dnn(a)}, 0) <= 0 THEN "
-                      f"CAST(NULL AS {dt[a]}) ELSE "
-                      f"s.{dsum(a)} / s.{dnn(a)} END")
+            ins[a] = (f"CASE WHEN s.__rep = 0 THEN s.__d_{a} "
+                      f"WHEN s.{dnn(a)} <= 0 THEN CAST(NULL AS {dt[a]}) "
+                      f"ELSE CAST(s.{dsum(a)} / s.{dnn(a)} AS {dt[a]}) "
+                      f"END")
             ins[f"__mv_sum_{a}"] = f"s.{dsum(a)}"
             ins[f"__mv_nn_{a}"] = f"s.{dnn(a)}"
         for a in mins:
@@ -1627,20 +1556,62 @@ class Engine:
             ins[f"__mv_hll_{a}"] = sk
             ins[a] = (f"COALESCE(hll_sketch_estimate({sk}), "
                       f"CAST(0 AS BIGINT))")
-        mv.merge_full(
-            delta, groups,
-            when_matched=[
-                {"action": "delete", "condition": dead},
-                {"action": "update", "set": upd},
-            ],
-            when_not_matched=[
-                # a purely-negative delta for an unseen group cannot
-                # happen (CDF preimages imply the group existed); a
-                # zero-count insert would be a dead group — skip it
-                {"action": "insert", "condition": f"s.__d_{c0} > 0",
-                 "values": ins},
-            ],
-            txn_app_id=app, txn_version=cur)
+        matched = [{"action": "delete", "condition": dead},
+                   {"action": "update", "set": upd}]
+        by_source: list[dict] = []
+        post_props: dict[str, str] = {}
+        if full:
+            # FULL replaces the stored state: matched groups take the
+            # fold's insert values, absent groups delete via the
+            # by-source arm
+            matched = [{"action": "update", "set": {
+                c: v for c, v in ins.items() if c not in groups}}]
+            by_source = [{"action": "delete"}]
+            if cur_dims and cur_dims != {
+                    d: int(v) for d, v in dim_vers.items()}:
+                post_props["mv.dimVersions"] = json.dumps(
+                    cur_dims, sort_keys=True)
+            if audit_clean_pending:
+                post_props["mv.scd2TombstoneAudit"] = "clean"
+        # A FULL refresh is idempotent by construction (replace
+        # semantics), so it needs no replay guard of its own — the fold
+        # marker only advances when the fold also covers source versions
+        # not folded yet.  When the marker is already at head (repairing
+        # a changed dim), commit WITHOUT the marker so the replace is
+        # never skipped as a replayed fold.
+        txn = {"txn_app_id": app, "txn_version": cur} if last < cur \
+            else {}
+        if post_props:
+            # ADVICE r11: marker and fold advance ATOMICALLY — with a
+            # separate set_properties commit, a crash between the two
+            # left the marker stale and the NEXT refresh redid the whole
+            # FULL recompute (benign but a surprise cost at 100 TB).
+            # Staging both in one table transaction lands them as ONE
+            # commit/version.  cur_dims was captured BEFORE the fold
+            # read the dims, so a concurrent dim write leaves its marker
+            # below head and triggers exactly one more FULL —
+            # conservative, never stale-serving.
+            mv.begin_transaction()
+        try:
+            mv.merge_full(
+                delta, groups, when_matched=matched,
+                when_not_matched=[
+                    # a purely-negative delta for an unseen group cannot
+                    # happen (CDF preimages imply the group existed); a
+                    # zero-count insert would be a dead group — skip it
+                    {"action": "insert",
+                     "condition": f"s.__d_{counts[0]} > 0",
+                     "values": ins},
+                ],
+                when_not_matched_by_source=by_source, **txn)
+            if post_props:
+                mv.set_properties(post_props)
+        except BaseException:
+            if post_props:
+                mv.rollback_transaction()
+            raise
+        if post_props:
+            mv.commit_transaction()
         return self._dml_ack(name, mv.latest_version())
 
     def _apply_changes_stmt(self, m: re.Match) -> DataFrame:

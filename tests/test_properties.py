@@ -563,6 +563,21 @@ def test_mv_refresh_equals_full_recompute(spark, tmp_path_factory, data,
                         F.count_distinct("v").alias("nd"))
                    .collect()), key=key)
     assert got == want
+    # the incremental fold leaves exactly the state REFRESH ... FULL
+    # rebuilds: every stored column, hidden counters included, and the
+    # hidden sketches' estimates
+    mv = engine.txlog_tables[nm]
+
+    def stored():
+        t = mv.read()
+        return sorted((tuple(r) for r in t.select(
+            *[F.expr(f"hll_sketch_estimate({c})").alias(c)
+              if c.startswith("__mv_hll_") else F.col(c)
+              for c in t.columns]).collect()), key=key)
+
+    before = stored()
+    engine.sql(f"REFRESH MATERIALIZED VIEW {nm} FULL")
+    assert stored() == before
 
 
 # -- r8: CDF serves values across ANY rename/update/append interleaving ------

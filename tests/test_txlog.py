@@ -1602,6 +1602,35 @@ def test_materialized_view_null_sum_and_null_group_key(spark, tdir):
     assert "__mv_nn_total" in mv.read().columns  # but it IS maintained
 
 
+def test_materialized_view_decimal_refresh_keeps_scale(spark, tdir):
+    """An incremental refresh over a DECIMAL(20,10) column stores the
+    from-scratch SUM and AVG to the last digit of scale: the fold
+    negates removed values instead of multiplying by an INT sign, which
+    widened the sum past 38 digits and made Spark drop scale."""
+    from decimal import Decimal
+
+    engine = _mv_engine(spark)
+    schema = "grp string, v decimal(20,10)"
+    src = TxLogTable.create(
+        spark, tdir,
+        spark.createDataFrame([("a", Decimal("1234567890.1234567891"))],
+                              schema),
+        enable_cdf=True)
+    engine.register_txlog("dsrc", src)
+    engine.sql("CREATE MATERIALIZED VIEW dmv AS "
+               "SELECT grp, COUNT(*) AS n, SUM(v) AS total, "
+               "AVG(v) AS mean FROM dsrc GROUP BY grp")
+    src.append(spark.createDataFrame([("a", Decimal("2.0000000003"))],
+                                     schema))
+    engine.sql("REFRESH MATERIALIZED VIEW dmv")
+    got = [tuple(r) for r in engine.txlog_tables["dmv"].read()
+           .select("grp", "n", "total", "mean").collect()]
+    want = [tuple(r) for r in src.read().groupBy("grp")
+            .agg(F.count("*"), F.sum("v"), F.avg("v")).collect()]
+    assert got == want
+    assert got[0][2] == Decimal("1234567892.1234567894")
+
+
 def test_materialized_view_minmax_repair_and_where(spark, tdir):
     """MIN/MAX maintenance: inserts fold arithmetically; a delete or
     update that removes a group's extremum triggers the bounded

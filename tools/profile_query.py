@@ -26,8 +26,12 @@ from distributed_database_for_sql_spark.queries import registry  # noqa: E402
 from distributed_database_for_sql_spark.session import get_spark  # noqa: E402
 
 
-def all_job_ids(spark):
-    return sorted(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+def next_job_id(spark):
+    """The id the scheduler gives the next job.  Ids are allocated in
+    order across every job group, so the jobs a call launched are the
+    ids between two reads — including a stream's micro-batch jobs,
+    which run under the stream's own job group."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
 
 def main() -> None:
@@ -54,7 +58,7 @@ def main() -> None:
     for name in args.names:
         spec = specs[name]
         for rep in range(args.repeat):
-            before_jobs = set(all_job_ids(spark))
+            first_job = next_job_id(spark)
             prof = cProfile.Profile() if args.cprofile else None
             t0 = time.time()
             if prof:
@@ -64,18 +68,17 @@ def main() -> None:
             if prof:
                 prof.disable()
             wall = time.time() - t0
-            after_jobs = set(all_job_ids(spark))
-            new_jobs = sorted(after_jobs - before_jobs)
             st = spark.sparkContext.statusTracker()
-            njobs = len(new_jobs)
+            # an id with no job info ran no job (e.g. zero partitions)
+            jobs = [ji for ji in map(st.getJobInfo,
+                                     range(first_job, next_job_id(spark)))
+                    if ji is not None]
+            njobs = len(jobs)
             # per-job wall estimate via job info (submission->completion
             # not exposed; report stage/task counts instead)
             nstages = 0
             ntasks = 0
-            for jid in new_jobs:
-                ji = st.getJobInfo(jid)
-                if ji is None:
-                    continue
+            for ji in jobs:
                 for sid in ji.stageIds:
                     si = st.getStageInfo(sid)
                     if si is not None:
